@@ -2,15 +2,23 @@ package graft.engine
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.canon.Canon
 import graft.frontier.{CuckooFilter, FrontierHeap, PolicyCache}
 import graft.model.Model._
 import graft.ops.LinkOps
-import graft.probes.{CrawlConfig, Probes}
+import graft.probes.{CrawlConfig, ProbeService, Probes}
 import graft.spans.SpanCodec
 import graft.tables.SnapTable
 import graft.universe.Universe
@@ -44,20 +52,25 @@ import graft.universe.Universe
   * per round; Spark's shuffle replaces the queue, Tungsten replaces pickle.
   */
 object Engine {
+  /** One row of the results table. */
   case class ResultRow(domain: String, pop_round: Int, pop_rank: Long, result: DomainResult)
+  /** One row of the streaming crawl's results table (no pop order). */
+  case class StreamResultRow(domain: String, result: DomainResult)
   case class BacklogRow(domain: String, canonical: String, key: Long,
       nsBucket: Int, priority: Int, seq: Long, depth: Int, active: Boolean)
   case class NsIpRef(domain: String, nsIdx: Int, ns: String,
       fam: Int, ipIdx: Int, ip: String)
   case class RoundStats(round: Int, admitted: Long, crawled: Long,
       deferred: Long, seconds: Double, discovered: Long = 0L,
-      /** Wall seconds per loop phase (seed/admit/select/commit_results/
-        * commit_spans/discover/commit_backlog/commit_ckpt/compact) —
-        * frontier rounds are latency-bound on fixed per-round costs at
+      /** Wall seconds per loop phase (seed/admit/filter_refs/budgets/
+        * select/crawl_plan/commit_results/commit_spans/discover/
+        * commit_backlog/commit_count/commit_ckpt/compact) — frontier
+        * rounds are latency-bound on fixed per-round costs at
         * politeness-bounded sizes, so the breakdown is first-class
-        * observability, not debug output. The probe pipeline cost lands
-        * inside the commit phases (each commit is a separate pruned pass
-        * over it).
+        * observability, not debug output. `crawl_plan` builds the probe
+        * stage (salt counts, range bounds, the layout shuffle); the probes
+        * themselves land inside the commit phases (each commit is a
+        * separate pass over them).
         */
       phases: Map[String, Double] = Map.empty)
 
@@ -124,6 +137,78 @@ object Engine {
       val deterministic = false
       def now(): String =
         java.time.LocalDateTime.now(java.time.ZoneOffset.UTC).format(UtcFmt)
+    }
+  }
+
+  /** Catalyst rows for a type that carries the 1,628-leaf [[DomainResult]]
+    * tree, built without a per-query serializer.
+    *
+    * A Dataset of such a type puts the whole serializer expression tree
+    * into every plan that produces it, and Spark re-derives, re-analyses
+    * and re-renders that tree for each query, then recompiles its
+    * generated classes: the session's codegen cache (100 entries, a static
+    * conf) is evicted by the ~170 classes a crawl round compiles, so
+    * nothing survives from one round to the next. Here the encoder is
+    * derived once per JVM, its compiled serializers are pooled JVM-wide
+    * (one is borrowed per task and returned when the task completes;
+    * a serializer reuses its output row, so it is never shared between
+    * running tasks), and [[frame]] hands the encoded rows to Spark as a
+    * bare RDD scan.
+    *
+    * Instances are Scala `object`s: a task closure that captures one
+    * deserializes to the executor JVM's own instance and pool.
+    */
+  abstract class WideRows[T: TypeTag] extends Serializable {
+    @transient private lazy val encoder: ExpressionEncoder[T] = ExpressionEncoder[T]()
+    @transient private lazy val pool =
+      new java.util.concurrent.ConcurrentLinkedQueue[ExpressionEncoder.Serializer[T]]()
+
+    /** One task's rows, encoded by a pooled serializer. Each returned row
+      * is overwritten by the next: a consumer that keeps rows must copy.
+      */
+    private def encode(rows: Iterator[T]): Iterator[InternalRow] = {
+      val ser = Option(pool.poll()).getOrElse(encoder.createSerializer())
+      Option(TaskContext.get()).foreach(
+        _.addTaskCompletionListener[Unit](_ => pool.offer(ser)))
+      rows.map(ser)
+    }
+
+    /** `rows` as a DataFrame of `T`'s encoder schema whose plan is an
+      * RDD scan.
+      */
+    def frame(spark: SparkSession, rows: RDD[T]): DataFrame =
+      GraftSqlBridge.internalCreateDataFrame(spark, rows.mapPartitions(encode), encoder.schema)
+  }
+  object ResultRows extends WideRows[ResultRow]
+  object StreamResultRows extends WideRows[StreamResultRow]
+
+  /** A partition's probe function: one [[Probes]] and one nameserver-IP
+    * probe cache, shared by every entry the function is applied to — the
+    * reference's Redis probe cache (`dns_utils.py:235-253`) per partition.
+    */
+  private[engine] def prober(svc: ProbeService, conf: CrawlConfig,
+      ck: Clock): FrontierEntry => DomainResult = {
+    val p = new Probes(svc, conf)
+    val nsIpCache = scala.collection.mutable.HashMap.empty[String, NsIp]
+    val (hasV4, hasV6) = (p.sourceIpv4.isDefined, p.sourceIpv6.isDefined)
+    e => {
+      p.armDeadline() // per-domain T3 budget, like processDomain
+      val dl = p.getDnsLocal(e.canonical)
+      val ns = p.u.nsFor(e.canonical)
+      val auth =
+        if (ns.isEmpty) None
+        else Some(ns.filter(_.nonEmpty).map { n =>
+          val v4 = if (hasV4) p.u.nsIps4(n).map(ip =>
+            nsIpCache.getOrElseUpdate(ip, p.probeNsIp(ip))) else Seq.empty
+          val v6 = if (hasV6) p.u.nsIps6(n).map(ip =>
+            nsIpCache.getOrElseUpdate(ip, p.probeNsIp(ip))) else Seq.empty
+          NsAuth(n, Option.when(v4.nonEmpty)(v4), Option.when(v6.nonEmpty)(v6))
+        })
+      // stamped per domain, like process_domain (crawl.py:167)
+      DomainResult(e.canonical, ck.now(), dl, auth,
+        p.getMail(e.canonical, dl), p.getWeb(e.canonical, dl),
+        p.getWebPaths(e.canonical, dl), p.u.hstsPreload(e.canonical),
+        Option.when(conf.saveWorkerHostname)(conf.workerHostname))
     }
   }
 
@@ -335,11 +420,12 @@ class Engine(
 
   private def filterDir(round: Int) = s"$workDir/filters/r$round"
 
+  /** The committed checkpoint's snapshot refs (partitions that have one). */
   private def loadFilterRefs(): Map[Int, String] =
     checkpointT.read() match {
       case None => Map.empty
       case Some(df) => df.select("partition_id", "seen_filter_snapshot_ref")
-        .as[(Int, String)].collect().toMap
+        .as[(Int, String)].collect().toMap.filter(_._2.nonEmpty)
     }
 
   /** Distributed seen-check + filter update. Entries are co-partitioned
@@ -349,7 +435,7 @@ class Engine(
     */
   private[graft] def admitUnseen(entries: Dataset[FrontierEntry], round: Int)
       : Dataset[FrontierEntry] =
-    admitUnseenInto(entries, loadFilterRefs().filter(_._2.nonEmpty), filterDir(round))
+    admitUnseenInto(entries, loadFilterRefs(), filterDir(round))
 
   /** Core of [[admitUnseen]] with explicit filter refs and snapshot dir —
     * the discovery pass re-admits against THIS round's seed snapshots
@@ -449,9 +535,10 @@ class Engine(
   }
 
   /** Refs after a round: partitions touched this round point at the new
-    * snapshot files; untouched partitions keep their previous ref.
+    * snapshot files; untouched partitions keep their `committed` ref.
     */
-  private def currentFilterRefs(round: Int): Map[Int, String] = {
+  private def currentFilterRefs(committed: Map[Int, String], round: Int)
+      : Map[Int, String] = {
     def scan(d: String): Map[Int, String] = {
       val dir = Paths.get(d)
       if (!Files.isDirectory(dir)) Map.empty[Int, String]
@@ -469,8 +556,7 @@ class Engine(
     }
     // precedence: discovery-pass snapshots (superset of the seed pass on
     // the partitions both touched) > this round's seed pass > committed
-    loadFilterRefs().filter(_._2.nonEmpty) ++
-      scan(filterDir(round)) ++ scan(filterDir(round) + "d")
+    committed ++ scan(filterDir(round)) ++ scan(filterDir(round) + "d")
   }
 
   // ------------------------------------------------------- politeness
@@ -522,16 +608,15 @@ class Engine(
     */
   private[graft] case class RoundSelection(
       selected: Dataset[FrontierEntry],
+      /** `selected`'s columns plus its global `pop_rank`: the probe
+        * stage's input. The rank rides on the narrow entry rows, so no
+        * pass joins it onto the wide result rows.
+        */
+      ranked: DataFrame,
       deferred: Dataset[FrontierEntry],
-      /** (o_domain, pop_rank) — broadcast-hinted on the driver path. */
-      popOrder: org.apache.spark.sql.DataFrame,
       nSelected: Long,
       /** frontier-partition id → selected count (≤ frontierPartitions rows). */
       perPartition: Map[Int, Long],
-      /** canonical → discovery depth; None on the fallback path (the
-        * discovery pass joins instead of broadcasting a driver map).
-        */
-      depthOf: Option[Map[String, Int]],
       release: () => Unit)
 
   /** Distributed twin of the driver-path selection (the guarded fallback,
@@ -583,10 +668,10 @@ class Engine(
         Window.orderBy(col("nsBucket"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("nsBucket").as("ob"), col("_off"))
-    val popOrder = ranked
+    val withRank = ranked
       .join(broadcast(offs), col("nsBucket") === col("ob"))
-      .select(col("canonical").as("o_domain"),
-        (col("_off") + col("_rank")).as("pop_rank"))
+      .withColumn("pop_rank", col("_off") + col("_rank"))
+      .drop("ob", "_off", "_rank")
     val deferred = frontier
       .join(ranked.select(col("canonical").as("_selc")),
         col("canonical") === col("_selc"), "left_anti")
@@ -596,8 +681,7 @@ class Engine(
     val perPartition = selected
       .groupBy(pmod(col("key"), lit(fp.toLong)).cast("int").as("pid"))
       .count().as[(Int, Long)].collect().toMap
-    RoundSelection(selected, deferred, popOrder, nSelected, perPartition,
-      depthOf = None,
+    RoundSelection(selected, withRank, deferred, nSelected, perPartition,
       release = () => { ranked.unpersist(); counts.unpersist(); () })
   }
 
@@ -617,7 +701,7 @@ class Engine(
     * hint (ad-hoc `crawlDomains` / bench callers) the full map collects,
     * as before.
     */
-  private def saltCounts(entries: Dataset[FrontierEntry],
+  private def saltCounts(entries: Dataset[_],
       totalHint: Option[Long] = None): Map[Int, Int] = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     totalHint match {
@@ -660,74 +744,16 @@ class Engine(
       sizeHint: Option[Long] = None): Dataset[DomainResult] = {
     val u = svc // probe leaves go through the pluggable service
     val conf = cfg
-    val ck = clock // stamped per domain, like process_domain (crawl.py:167)
-    // cache only if the caller hasn't (run() passes already-cached rounds;
-    // re-caching would log "already cached" and double-register storage)
-    val needCache = entries.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    val ck = clock
+    // cache only if the caller hasn't (re-caching would log "already
+    // cached" and double-register storage)
+    val needCache = entries.storageLevel == StorageLevel.NONE
     val input = if (needCache) entries.cache() else entries
-    val salts = saltCounts(input, sizeHint) // hinted: driver map ≤ cores
-    val saltOf = udf((b: Int) => salts.getOrElse(b, 1))
-    // Explicit partition count: the probe stage is compute-bound on tiny
-    // rows, so AQE's byte-based coalescing would collapse it onto a few
-    // cores (40 MB of FrontierEntry rows ≈ hours of probe CPU at real
-    // scale). 8× cores measured best at both 8 and 32 cores (500k-domain
-    // legs: ×4 → 6.4/5.2 s, ×8 → 6.1/3.8 s, ×16 → 7.6/3.5 s at 8/32
-    // cores) — probe cost varies per domain (NS fan-out, redirect
-    // chains), so finer tasks amortize the last wave's stragglers;
-    // tunable via graft.probeParts.mult, and user partition counts are
-    // preserved by AQE.
-    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val maxParts = shuffleParts *
-      spark.conf.getOption("graft.probeParts.mult").map(_.toInt).getOrElse(8)
-    // With a known input size (the frontier loop passes its politeness-
-    // bounded selected count), clamp task count so small rounds don't pay
-    // maxParts × fixed-task-overhead (~0.6 s/task measured: columnar
-    // builder setup over the wide result schema + closure/service init)
-    // for a few dozen rows each. Floor at one wave (shuffleParts = the
-    // session's core count) so every core still works; the 8× ceiling
-    // remains the straggler-amortization default for big inputs.
-    // 2000 rows/task ≈ 6 MB data files for the wide result schema; smaller
-    // files pay disproportionate per-file costs (a 1628-leaf-column footer
-    // with per-column stats is ~hundreds of KB regardless of row count)
-    val targetRows =
-      spark.conf.getOption("graft.probeParts.targetRows").map(_.toLong).getOrElse(2000L)
-    val probeParts = sizeHint match {
-      case Some(n) =>
-        math.max(shuffleParts.toLong, math.min(maxParts.toLong,
-          n / targetRows + 1L)).toInt
-      case None => maxParts
-    }
-    val salted = input
-      .withColumn("_salt", pmod(col("key"), saltOf(col("nsBucket"))))
-      .repartitionByRange(probeParts, col("nsBucket"), col("_salt"), col("key"))
-      .drop("_salt")
-      .as[FrontierEntry]
+    val salted = probeLayout(input.toDF(), sizeHint).as[FrontierEntry]
 
     val result = if (!dedupAcrossPartitions) {
       // single narrow pass: per-partition NS-probe cache + full assembly
-      salted.mapPartitions { it =>
-        val p = new Probes(u, conf)
-        val nsIpCache = scala.collection.mutable.HashMap.empty[String, NsIp]
-        val (hasV4, hasV6) = (p.sourceIpv4.isDefined, p.sourceIpv6.isDefined)
-        it.map { e =>
-          p.armDeadline() // per-domain T3 budget, like processDomain
-          val dl = p.getDnsLocal(e.canonical)
-          val ns = p.u.nsFor(e.canonical)
-          val auth =
-            if (ns.isEmpty) None
-            else Some(ns.filter(_.nonEmpty).map { n =>
-              val v4 = if (hasV4) p.u.nsIps4(n).map(ip =>
-                nsIpCache.getOrElseUpdate(ip, p.probeNsIp(ip))) else Seq.empty
-              val v6 = if (hasV6) p.u.nsIps6(n).map(ip =>
-                nsIpCache.getOrElseUpdate(ip, p.probeNsIp(ip))) else Seq.empty
-              NsAuth(n, Option.when(v4.nonEmpty)(v4), Option.when(v6.nonEmpty)(v6))
-            })
-          DomainResult(e.canonical, ck.now(), dl, auth,
-            p.getMail(e.canonical, dl), p.getWeb(e.canonical, dl),
-            p.getWebPaths(e.canonical, dl), p.u.hstsPreload(e.canonical),
-            Option.when(conf.saveWorkerHostname)(conf.workerHostname))
-        }
-      }
+      salted.mapPartitions(it => it.map(Engine.prober(u, conf, ck)))
     } else {
       // --- dedup-probe-join for nameserver IPs (cross-domain cache, J4/D3)
       // source-address gates are deterministic (same on driver/executor)
@@ -788,6 +814,69 @@ class Engine(
     result
   }
 
+  /** The probe stage's input layout: range-partitioned on `(nsBucket,
+    * salt, key)` with frequency-proportional salting (see [[crawlEntries]]),
+    * over any frame that carries the [[FrontierEntry]] columns.
+    */
+  private def probeLayout(input: DataFrame, sizeHint: Option[Long]): DataFrame = {
+    val salts = saltCounts(input, sizeHint) // hinted: driver map ≤ cores
+    val saltOf = udf((b: Int) => salts.getOrElse(b, 1))
+    // Explicit partition count: the probe stage is compute-bound on tiny
+    // rows, so AQE's byte-based coalescing would collapse it onto a few
+    // cores (40 MB of FrontierEntry rows ≈ hours of probe CPU at real
+    // scale). 8× cores measured best at both 8 and 32 cores (500k-domain
+    // legs: ×4 → 6.4/5.2 s, ×8 → 6.1/3.8 s, ×16 → 7.6/3.5 s at 8/32
+    // cores) — probe cost varies per domain (NS fan-out, redirect
+    // chains), so finer tasks amortize the last wave's stragglers;
+    // tunable via graft.probeParts.mult, and user partition counts are
+    // preserved by AQE.
+    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val maxParts = shuffleParts *
+      spark.conf.getOption("graft.probeParts.mult").map(_.toInt).getOrElse(8)
+    // With a known input size (the frontier loop passes its politeness-
+    // bounded selected count), clamp task count so small rounds don't pay
+    // maxParts × per-task fixed costs (service init, one parquet writer
+    // and its 1,628-leaf-column footer per task) for a few dozen rows
+    // each. Floor at one wave (shuffleParts = the session's core count)
+    // so every core still works; the 8× ceiling remains the straggler-
+    // amortization default for big inputs. 2000 rows/task ≈ 6 MB data
+    // files for the wide result schema; smaller files pay
+    // disproportionate per-file costs (a 1628-leaf-column footer with
+    // per-column stats is ~hundreds of KB regardless of row count)
+    val targetRows =
+      spark.conf.getOption("graft.probeParts.targetRows").map(_.toLong).getOrElse(2000L)
+    val probeParts = sizeHint match {
+      case Some(n) =>
+        math.max(shuffleParts.toLong, math.min(maxParts.toLong,
+          n / targetRows + 1L)).toInt
+      case None => maxParts
+    }
+    input
+      .withColumn("_salt", pmod(col("key"), saltOf(col("nsBucket"))))
+      .repartitionByRange(probeParts, col("nsBucket"), col("_salt"), col("key"))
+      .drop("_salt")
+  }
+
+  /** One round's probe output: each selected entry with its pop rank and
+    * result document, produced by the same per-partition probe function
+    * as [[crawlEntries]] over the same layout. An RDD, so the passes that
+    * consume it plan no [[DomainResult]] serializer; with AQE on, building
+    * it runs the layout's shuffle once, and every pass reads that shuffle
+    * output.
+    */
+  private def probeRanked(ranked: DataFrame, nSelected: Long)
+      : RDD[(FrontierEntry, Long, DomainResult)] = {
+    val (u, conf, ck) = (svc, cfg, clock)
+    val entry = struct(Encoders.product[FrontierEntry].schema.fieldNames.toSeq.map(col): _*)
+    probeLayout(ranked, Some(nSelected))
+      .select(entry.as("_1"), col("pop_rank").as("_2"))
+      .as[(FrontierEntry, Long)].rdd
+      .mapPartitions { it =>
+        val probe = Engine.prober(u, conf, ck)
+        it.map { case (e, rank) => (e, rank, probe(e)) }
+      }
+  }
+
   // ------------------------------------------------------------- run
 
   /** Batch-iterative frontier loop with MERGE checkpoints. Safe to stop
@@ -832,11 +921,16 @@ class Engine(
       val newWatermark = boundary.getOrElse(watermark)
       val chunk = seeds.where(col("seq") > watermark && col("seq") <= newWatermark).cache()
 
-      // 2. canonical dedup + seen-filter admission
+      // 2. canonical dedup + seen-filter admission against the committed
+      // snapshots (read once: the checkpoint only changes at round end);
+      // the count materializes this round's snapshots
+      val committedRefs = timed("filter_refs")(loadFilterRefs())
       val fresh = toFrontier(chunk)
-      val admitted = admitUnseen(fresh, round).cache()
-      val nAdmitted = timed("admit")(admitted.count()) // materializes filter snapshots too
-      val filterRefs = currentFilterRefs(round)
+      val (admitted, nAdmitted) = timed("admit") {
+        val a = admitUnseenInto(fresh, committedRefs, filterDir(round)).cache()
+        (a, a.count())
+      }
+      val filterRefs = timed("filter_refs")(currentFilterRefs(committedRefs, round))
 
       // 3. frontier = fresh admissions + deferred backlog
       val backlog = backlogT.read()
@@ -860,37 +954,36 @@ class Engine(
             .map(b => b -> policy.get(b, round, u.policyBudget)).toMap
           Option.when(m.valuesIterator.map(_.toLong).sum <= maxDriverSelectRows)(m)
         }
-      val sel = driverBudgets match {
+      val sel = timed("select")(driverBudgets match {
         case Some(budgets) =>
           val (selected0, deferred0) = selectUnderBudget(frontier, budgets, 64)
           val selected = selected0.cache()
           // ONE driver-side materialization of the bounded selected set
           // (≤ Σ budgets rows — checked against maxDriverSelectRows
-          // above): the selected count, global pop order, per-partition
-          // throughput counters, and discovery parent depths all derive
-          // from these rows — five Spark jobs saved per round.
-          val selRows = timed("select")(selected
-            .map(e => (e.canonical, e.nsBucket, e.priority, e.seq, e.key, e.depth))
-            .collect())
+          // above): the selected count, global pop order and
+          // per-partition throughput counters all derive from these rows.
+          val selRows = selected
+            .map(e => (e.canonical, e.nsBucket, e.priority, e.seq, e.key))
+            .collect()
           // deterministic pop order: (nsBucket, priority, seq, canonical)
-          // ascending — one local sort over the bounded rows. The
-          // broadcast hint keeps the rank join map-side; the side is
-          // bounded by Σ budgets.
-          val ordered = selRows.sortBy { case (c, b, p, s, _, _) => (b, p, s, c) }
+          // ascending — one local sort over the bounded rows, attached to
+          // the narrow entry rows by a broadcast join (the side is
+          // bounded by Σ budgets).
+          val ordered = selRows.sortBy { case (c, b, p, s, _) => (b, p, s, c) }
           val popOrder = broadcast(spark.createDataset(
             ordered.iterator.zipWithIndex
-              .map { case ((c, _, _, _, _, _), i) => (c, i + 1L) }.toSeq)
+              .map { case ((c, _, _, _, _), i) => (c, i + 1L) }.toSeq)
             .toDF("o_domain", "pop_rank"))
+          val ranked = selected.join(popOrder, col("canonical") === col("o_domain"))
+            .drop("o_domain")
           val fp = frontierPartitions
           val perPartition = selRows
             .groupBy(r => Math.floorMod(r._5, fp.toLong).toInt)
             .map { case (pid, rs) => (pid, rs.length.toLong) }
-          RoundSelection(selected, deferred0, popOrder, selRows.length.toLong,
-            perPartition,
-            depthOf = Some(selRows.iterator.map(r => (r._1, r._6)).toMap),
-            release = () => { selected.unpersist(); () })
-        case None => timed("select")(selectDistributed(frontier))
-      }
+          RoundSelection(selected, ranked, deferred0, selRows.length.toLong,
+            perPartition, release = () => { selected.unpersist(); () })
+        case None => selectDistributed(frontier)
+      })
       val selected = sel.selected
       val deferred = sel.deferred // consumed once (backlog commit) — no cache
       val nSelected = sel.nSelected
@@ -899,90 +992,69 @@ class Engine(
         done = true
       } else {
         // 5. crawl. Task count sized to the politeness-bounded round;
-        // partitioning is deterministic, so re-executing this plan always
+        // partitioning is deterministic, so re-executing the probes always
         // reproduces the same per-partition probe caches and results.
-        val results0 = crawlEntries(selected, sizeHint = Some(nSelected))
-        val dcfg = discovery
-
-        // Results, spans, and discovery each consume the probe pipeline
-        // as a SEPARATE action with a pass-specific serializer. Measured
-        // (EncodeDiag): the probe work is ~0.3 ms-core/domain while
-        // Tungsten-encoding the full nested result tree is ~7 ms-core —
-        // re-running the probes per consumer is ~25× cheaper than caching
-        // the wide rows just to share them (the columnar cache build pays
-        // the full encode once more before the write pays it again). Each
-        // pass serializes only the columns its own commit writes; the
-        // `selected` input is cached, so only the probe stage re-executes.
         //
-        // That trade is only sound under the ProbeService determinism
-        // contract. A non-deterministic (real-socket) service would let
-        // the passes observe DIFFERENT responses — results and spans
-        // could diverge for the same domain, and every domain would be
-        // fetched up to 3× per round, defeating the politeness budget —
-        // so the round's results are persisted once instead.
+        // Results, spans, and discovery each consume the probe output as
+        // a SEPARATE action, and the probes re-run per pass (they cost
+        // ~0.5 ms-core/domain, perfbench `probes.cpu_ms_per_domain`). The
+        // passes share one RDD, not a Dataset: a Dataset of DomainResult
+        // puts the 1,628-leaf serializer tree in every pass's plan, which
+        // Spark re-derives, re-analyses and re-renders per query, and whose
+        // generated classes it recompiles every round (the 100-entry
+        // codegen cache is evicted between rounds) — the larger part of a
+        // politeness-sized round (BENCH.md "Loop phase anatomy"). Over the
+        // RDD, the results pass encodes through [[Engine.ResultRows]]'
+        // pooled serializers, the spans pass serializes only (doc_id,
+        // spans), and discovery only (host, depth).
+        //
+        // Re-running the probes is only sound under the ProbeService
+        // determinism contract. A non-deterministic (real-socket) service
+        // would let the passes observe DIFFERENT responses — results and
+        // spans could diverge for the same domain, and every domain would
+        // be fetched up to 3× per round, defeating the politeness budget —
+        // so the round's probe output is persisted once instead.
+        val probed0 = timed("crawl_plan")(probeRanked(sel.ranked, nSelected))
         val multiPassUnsafe = !svc.deterministic || !clock.deterministic
-        val results =
-          if (multiPassUnsafe)
-            results0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else results0
+        val probed =
+          if (multiPassUnsafe) probed0.persist(StorageLevel.MEMORY_AND_DISK)
+          else probed0
+        val dcfg = discovery
+        val popRound = round
 
-        // Pass 1 — results table. On the driver path the rank side is
-        // broadcast-hinted (bounded by Σ budgets); a shuffle join would
-        // move the whole result payload just to attach a long.
-        val resultRows = results.map(r => (r.domain, r))
-          .toDF("domain", "result")
-          .join(sel.popOrder, col("domain") === col("o_domain"))
-          .withColumn("pop_round", lit(round))
-          .select(col("domain"), col("pop_round"), col("pop_rank"), col("result"))
-        timed("commit_results")(resultsT.mergeCommit(resultRows))
+        // Pass 1 — results table, pop order attached in the encoding pass.
+        timed("commit_results")(resultsT.mergeCommit(ResultRows.frame(spark,
+          probed.map { case (_, rank, r) => ResultRow(r.domain, popRound, rank, r) })))
         // nCrawled ≡ nSelected by construction (the crawl stage is a 1:1
-        // map over the selected set; the rank join is a bijection on it).
-        // Derived, not accumulated: accumulators are exactly-once only
-        // for actions, so a retried/speculative task would double-count.
+        // map over the selected set). Derived, not accumulated:
+        // accumulators are exactly-once only for actions, so a
+        // retried/speculative task would double-count.
         val nCrawled = nSelected
 
         // Pass 2 — span re-encoding (the interleaved-docs table). The
-        // serializer carries only (doc_id, spans); the result tree is
-        // walked once while JVM-resident and never Tungsten-encoded here.
+        // result tree is walked once while JVM-resident and never
+        // Tungsten-encoded here.
         timed("commit_spans")(spansT.mergeCommit(
-          results.map(r => SpanCodec.encode(r)).toDF()))
+          spark.createDataset(probed.map(t => SpanCodec.encode(t._3))).toDF()))
 
         // Pass 3 (5b) — discovery: hosts found in this round's results
-        // re-enter the frontier as depth+1 entries, deduped against
-        // everything ever admitted via THIS round's filter snapshots (so a
-        // host that is both a seed and a discovery is crawled exactly
-        // once), written to a sibling snapshot dir (r${round}d). Parent
-        // depths ride a driver map bounded by |selected| ≤ Σ budgets —
-        // the same bound the broadcast pop-rank side already relies on.
+        // re-enter the frontier as depth+1 entries (the parent depth is
+        // the probed entry's own), deduped against everything ever
+        // admitted via THIS round's filter snapshots (so a host that is
+        // both a seed and a discovery is crawled exactly once), written to
+        // a sibling snapshot dir (r${round}d).
         var nDiscovered = 0L
         var discBacklog: Option[Dataset[BacklogRow]] = None
         var discCached: Option[Dataset[FrontierEntry]] = None
         if (discovery.enabled) {
-          val found = sel.depthOf match {
-            case Some(depths) =>
-              // driver path: parent depths ride a broadcast map bounded
-              // by |selected| ≤ Σ budgets
-              val depthB = spark.sparkContext.broadcast(depths)
-              results.flatMap { r =>
-                val d = depthB.value.getOrElse(r.domain, 0)
-                if (d >= dcfg.maxDepth) Iterator.empty
-                else Engine.discoveredHosts(r, r.domain, dcfg)
-                  .iterator.map(h => (h, d + 1))
-              }
-            case None =>
-              // fallback path: the selected set may exceed the driver
-              // guard, so depths attach via a join keyed by domain
-              val depths = selected.map(e => (e.canonical, e.depth))
-              results.joinWith(depths, results("domain") === depths("_1"))
-                .flatMap { case (r, (_, d)) =>
-                  if (d >= dcfg.maxDepth) Iterator.empty
-                  else Engine.discoveredHosts(r, r.domain, dcfg)
-                    .iterator.map(h => (h, d + 1))
-                }
-          }
+          val found = spark.createDataset(probed.flatMap { case (e, _, r) =>
+            if (e.depth >= dcfg.maxDepth) Iterator.empty
+            else Engine.discoveredHosts(r, r.domain, dcfg)
+              .iterator.map(h => (h, e.depth + 1))
+          })
+          val discRefs = timed("filter_refs")(currentFilterRefs(committedRefs, round))
           val discAdmitted = admitUnseenInto(toFrontierDiscovered(found),
-            currentFilterRefs(round).filter(_._2.nonEmpty),
-            filterDir(round) + "d").cache()
+            discRefs, filterDir(round) + "d").cache()
           nDiscovered = timed("discover")(discAdmitted.count()) // materializes filter snapshots
           if (nDiscovered > 0) {
             discCached = Some(discAdmitted)
@@ -997,8 +1069,7 @@ class Engine(
         // probe + wide encode + write; commit_spans probe + spans only).
         // Backlog rows are narrow; coalesce caps the per-round file count
         // (the 32-core loop once ran SLOWER than 8-core purely on
-        // near-empty commit files — 73 vs 47 s/round), and nDeferred
-        // rides an accumulator instead of a separate count job.
+        // near-empty commit files — 73 vs 47 s/round).
         val writeParts = math.max(1L, math.min(frontierPartitions.toLong,
           nCrawled / 4000L + 1L)).toInt
         val backlogUpdates =
@@ -1014,9 +1085,10 @@ class Engine(
         // exactly deferred(active) + selected(inactive) + discoveries):
         // exact under task retries, unlike a map-side accumulator, and
         // the footer-count of the fresh narrow delta is one tiny job
-        val nDeferred = backlogT.commitRowCount(backlogV) - nSelected - nDiscovered
+        val nDeferred =
+          timed("commit_count")(backlogT.commitRowCount(backlogV)) - nSelected - nDiscovered
         discCached.foreach(_.unpersist())
-        if (multiPassUnsafe) results.unpersist()
+        if (multiPassUnsafe) probed.unpersist()
         // per-partition throughput: crawled count per frontier partition
         // (pmod(key, P) — the same key the seen-filter shards on)
         val perPartition = sel.perPartition
@@ -1024,7 +1096,8 @@ class Engine(
         // discovery wrote additional snapshots after `filterRefs` was
         // taken — re-list so resume sees the d-pass state
         val finalRefs =
-          if (nDiscovered > 0) currentFilterRefs(round) else filterRefs
+          if (nDiscovered > 0) timed("filter_refs")(currentFilterRefs(committedRefs, round))
+          else filterRefs
         val lineage = (0 until frontierPartitions).map { pid =>
           PartitionLineage(pid, newWatermark,
             finalRefs.getOrElse(pid, ""),

@@ -1,12 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.storage.StorageLevel
 
 import graft.canon.Canon
+import graft.engine.Engine
 import graft.model.Model._
 import graft.probes.{CrawlConfig, Probes}
+import graft.spans.SpanCodec
+import graft.tables.SnapTable
 import graft.universe.Universe
 
 /** End-to-end Structured-Streaming crawl (north star: "readStream →
@@ -193,17 +198,12 @@ object StreamingCrawl {
         val sp = batch.sparkSession
         import sp.implicits._
         if (!batch.isEmpty) {
-          val b = batch.cache()
+          val b = batch.rdd.persist(StorageLevel.MEMORY_AND_DISK)
           try {
-            val spansT = new graft.tables.SnapTable(sp,
-              s"$workDir/result_spans", Seq("doc_id"))
-            spansT.mergeCommit(b.map(t => graft.spans.SpanCodec.encode(t._2)).toDF())
-            val resultsT = new graft.tables.SnapTable(sp,
-              s"$workDir/results", Seq("domain"))
-            resultsT.mergeCommit(b.map(t => (t._2.domain, t._2)).toDF("domain", "result"))
+            commitBatch(sp, workDir, b.map(_._2))
             val hosts = b.flatMap { case (depth, r) =>
               if (depth >= dcfg.maxDepth) Iterator.empty
-              else graft.engine.Engine.discoveredHosts(r, r.domain, dcfg)
+              else Engine.discoveredHosts(r, r.domain, dcfg)
                 .iterator.map(h => (h, depth + 1))
             }
             val hs = hosts.collect() // bounded by budget × maxPerDomain
@@ -227,26 +227,32 @@ object StreamingCrawl {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[DomainResult], _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
         if (!batch.isEmpty) {
-          // cache: the two commits below must observe the SAME probe
+          // persisted: the two commits must observe the SAME probe
           // responses even under a non-deterministic (real-socket)
           // ProbeService upstream, and no domain may be fetched twice per
           // micro-batch (politeness). Batches are politeness-bounded, so
-          // the wide-row materialization is small by construction.
-          val b = batch.cache()
-          try {
-            val spansT = new graft.tables.SnapTable(spark,
-              s"$workDir/result_spans", Seq("doc_id"))
-            spansT.mergeCommit(b.map(graft.spans.SpanCodec.encode).toDF())
-            val resultsT = new graft.tables.SnapTable(spark,
-              s"$workDir/results", Seq("domain"))
-            resultsT.mergeCommit(b.map(r => (r.domain, r)).toDF("domain", "result"))
-          } finally b.unpersist()
+          // the materialization is small by construction.
+          val b = batch.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+          try commitBatch(batch.sparkSession, workDir, b)
+          finally b.unpersist()
         }
         ()
       }
       .start()
+  }
+
+  /** One micro-batch's MERGE commits: the span re-encoding, then the
+    * results through the batch engine's pooled wide-row serializers
+    * ([[graft.engine.Engine.WideRows]]).
+    */
+  private def commitBatch(spark: SparkSession, workDir: String,
+      results: RDD[DomainResult]): Unit = {
+    import spark.implicits._
+    new SnapTable(spark, s"$workDir/result_spans", Seq("doc_id"))
+      .mergeCommit(spark.createDataset(results.map(SpanCodec.encode)).toDF())
+    new SnapTable(spark, s"$workDir/results", Seq("domain"))
+      .mergeCommit(Engine.StreamResultRows.frame(spark,
+        results.map(r => Engine.StreamResultRow(r.domain, r))))
   }
 }

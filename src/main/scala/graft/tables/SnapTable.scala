@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   *     manifest list: a commit appends deltas, never rewrites history);
   *   - `_current` is flipped by atomic rename — readers see the old or the
   *     new snapshot, never a partial one;
+  *   - a commit stores its frame as given: a row's commit version is the
+  *     `N` of its `data/v{N}` directory, attached at read time (tables
+  *     written before this layout also stored it as a `_commit_version`
+  *     column; read overrides that column with the same value);
   *   - MERGE keyed by `keyCols`: on read, rows from higher commit versions
   *     supersede lower ones per key (one window over the short key — the
   *     scalable upsert read at 100 TB; compaction would fold deltas the
@@ -49,13 +53,14 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
 
   /** MERGE-commit: append `df` as a new delta; rows with keys present in
     * older versions supersede them at read time. Returns new version.
+    * The frame is written as given — no projection is laid over it, so a
+    * wide row reaches the writer in the physical form its producer built.
     */
   def mergeCommit(df: DataFrame): Int = {
     val prev = currentVersion
     val v = prev.map(_ + 1).getOrElse(1)
     val dataDir = s"data/v$v"
-    df.withColumn("_commit_version", lit(v))
-      .write.mode("overwrite").parquet(rootP.resolve(dataDir).toString)
+    df.write.mode("overwrite").parquet(rootP.resolve(dataDir).toString)
     val dirs = prev.map(manifest).getOrElse(Seq.empty) :+ dataDir
     val json = s"""{"version":$v,"key":${keyCols.mkString("[\"", "\",\"", "\"]")},"dirs":${dirs.mkString("[\"", "\",\"", "\"]")}}"""
     Files.write(snapsP.resolve(s"v$v.json"), json.getBytes(StandardCharsets.UTF_8))
@@ -86,8 +91,10 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     val v = asOfVersion.orElse(currentVersion).getOrElse(return None)
     val dirs = manifest(v)
     if (dirs.isEmpty) return None
-    val union = dirs.map(d => spark.read.parquet(rootP.resolve(d).toString))
-      .reduce(_ unionByName _)
+    val union = dirs.map { d =>
+      spark.read.parquet(rootP.resolve(d).toString)
+        .withColumn("_commit_version", lit(d.stripPrefix("data/v").toInt))
+    }.reduce(_ unionByName _)
     val resolved = if (keyCols.isEmpty) union else {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(col("_commit_version").desc)
@@ -108,8 +115,7 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     val prev = currentVersion.get
     val v = prev + 1
     val dataDir = s"data/v$v"
-    resolved.withColumn("_commit_version", lit(v))
-      .write.mode("overwrite").parquet(rootP.resolve(dataDir).toString)
+    resolved.write.mode("overwrite").parquet(rootP.resolve(dataDir).toString)
     val json = s"""{"version":$v,"key":${keyCols.mkString("[\"", "\",\"", "\"]")},"dirs":["$dataDir"]}"""
     Files.write(snapsP.resolve(s"v$v.json"), json.getBytes(StandardCharsets.UTF_8))
     val tmp = rootP.resolve(s"_current.tmp.$v")

@@ -29,4 +29,14 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** DataFrame over already-encoded Catalyst rows (`internalCreateDataFrame`
+    * is `private[sql]`). The plan is a bare RDD scan: no object serializer
+    * is analysed, optimized or code-generated for it, whatever the width
+    * of `schema`.
+    */
+  def internalCreateDataFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -2,11 +2,17 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, LogicalPlan, SerializeFromObject}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.types.{DataType, ObjectType}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
-import graft.model.Model.{Doc, Span}
+import graft.model.Model.{Doc, DomainResult, Span}
 import graft.universe.Universe
 
 /** Tight per-round budgets so the politeness/backlog path is exercised at
@@ -58,6 +64,11 @@ class EngineSpec extends AnyFunSuite {
     assert(stats.nonEmpty)
     // politeness budget (12/25 per round) forces deferrals across rounds
     assert(stats.exists(_.deferred > 0), s"expected deferrals, got $stats")
+    // the phase timers account for the round: nothing large runs untimed
+    stats.foreach { s =>
+      assert(s.phases.values.sum >= 0.8 * s.seconds,
+        f"round ${s.round}: phases sum to ${s.phases.values.sum}%.2f of ${s.seconds}%.2f s: ${s.phases}")
+    }
 
     val results = eng.resultsTable.read().get
     val domains = results.select("domain").as[String].collect()
@@ -73,6 +84,56 @@ class EngineSpec extends AnyFunSuite {
     // results carry the full nested document
     val one = results.where($"domain" === domains.head).select("result.DNS_LOCAL.DNSSEC.valid")
     assert(one.count() == 1)
+  }
+
+  test("rounds after the first plan no DomainResult serializer or deserializer") {
+    // a session of its own (docs included: derived Datasets report to the
+    // session of their input), so its listener sees only this run's queries
+    val session = spark.newSession()
+    val dir = graft.TmpDirs.create("engine-plans").toString
+    val docs = session.createDataset(seedDocs(150).collect().toSeq)(Encoders.product[Doc])
+    def eng = new Engine(session, u, workDir = dir, frontierPartitions = 8,
+      seedChunkSize = 60, discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
+    assert(eng.run(docs, maxRounds = 1).map(_.round) == Seq(1))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.analyzed)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.analyzed)
+    }
+    session.listenerManager.register(listener)
+    val stats =
+      try eng.run(docs, maxRounds = 3)
+      finally {
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+        session.listenerManager.unregister(listener)
+      }
+    assert(stats.map(_.round) == Seq(2, 3))
+    val wide = ObjectType(classOf[DomainResult])
+    def carriesResult(e: Expression): Boolean = e.exists(_.dataType == wide)
+    import scala.jdk.CollectionConverters._
+    val offending = plans.asScala.toSeq.flatMap(_.collect {
+      case s: SerializeFromObject if s.serializer.exists(carriesResult) => s.nodeName
+      case d: DeserializeToObject if carriesResult(d.deserializer) => d.nodeName
+    })
+    val writes = plans.asScala.toSeq.collect {
+      case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString
+    }
+    assert(writes.count(_.contains("/results/data/")) == 2, s"writes seen: $writes")
+    assert(offending.isEmpty, s"${offending.size} wide object plans: $offending")
+  }
+
+  test("the committed results schema is the ResultRow encoder's, nested nullability included") {
+    val dir = graft.TmpDirs.create("engine-schema").toString
+    val eng = newEngine(dir)
+    eng.run(seedDocs(40), maxRounds = 1)
+    val file = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "results", "data", "v1"))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toString), spark.sparkContext.hadoopConfiguration))
+    val stored = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally reader.close()
+    assert(DataType.fromJson(stored) == Encoders.product[Engine.ResultRow].schema)
   }
 
   test("pop order is deterministic and independent of shuffle parallelism") {

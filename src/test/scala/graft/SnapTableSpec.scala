@@ -53,6 +53,37 @@ class SnapTableSpec extends AnyFunSuite {
       Seq(("a", 9), ("b", 2), ("c", 3)))
   }
 
+  test("a table whose first delta stored _commit_version still resolves and time-travels") {
+    val spark = SparkSessionFixture.spark
+    import spark.implicits._
+    val dir = graft.TmpDirs.create("snaptable-old").toString
+    // version 1 in the earlier layout: the commit version stored as a column
+    Seq(("a", 1, 1), ("b", 1, 1)).toDF("k", "v", "_commit_version")
+      .write.parquet(s"$dir/data/v1")
+    Files.createDirectories(java.nio.file.Paths.get(dir, "snapshots"))
+    Files.writeString(java.nio.file.Paths.get(dir, "snapshots", "v1.json"),
+      """{"version":1,"key":["k"],"dirs":["data/v1"]}""")
+    Files.writeString(java.nio.file.Paths.get(dir, "_current"), "1")
+    val t = new SnapTable(spark, dir, Seq("k"))
+    def rows(v: Option[Int]) = t.read(v).get.as[(String, Int)].collect().sorted.toSeq
+    assert(rows(None) == Seq(("a", 1), ("b", 1)))
+    assert(t.read().get.columns.toSeq == Seq("k", "v"))
+
+    t.mergeCommit(Seq(("b", 2), ("c", 2)).toDF("k", "v"))
+    t.mergeCommit(Seq(("a", 3)).toDF("k", "v"))
+    assert(rows(None) == Seq(("a", 3), ("b", 2), ("c", 2))) // latest wins over v1
+    assert(rows(Some(1)) == Seq(("a", 1), ("b", 1)))
+    assert(rows(Some(2)) == Seq(("a", 1), ("b", 2), ("c", 2)))
+    // new-layout deltas store the frame as given
+    assert(spark.read.parquet(s"$dir/data/v2").columns.toSeq == Seq("k", "v"))
+
+    assert(t.compact().contains(4))
+    assert(rows(None) == Seq(("a", 3), ("b", 2), ("c", 2)))
+    assert(rows(Some(2)) == Seq(("a", 1), ("b", 2), ("c", 2)))
+    t.mergeCommit(Seq(("c", 5)).toDF("k", "v"))
+    assert(rows(None) == Seq(("a", 3), ("b", 2), ("c", 5)))
+  }
+
   test("commits are append-only deltas (merge-on-read, no history rewrite)") {
     val spark = SparkSessionFixture.spark
     import spark.implicits._
