@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.canon.Canon
-import graft.frontier.{CuckooFilter, FrontierHeap, PolicyCache}
+import graft.frontier.CuckooFilter
 import graft.model.Model._
 import graft.ops.LinkOps
 import graft.probes.{CrawlConfig, ProbeService, Probes}
@@ -31,8 +31,8 @@ import graft.universe.Universe
   *   - a partitioned [[CuckooFilter]] domain-seen set co-partitioned with
   *     the frontier (`pmod(key, P)`), checked and updated distributed —
   *     never collected as raw keys,
-  *   - per-nameserver-bucket politeness budgets (token budget per round
-  *     from the zone-policy cache) with deterministic pop order
+  *   - per-nameserver-bucket politeness budgets (entries per round from
+  *     the zone policy, `Universe.policyBudget`) with deterministic pop order
   *     `(round, nsBucket, ttlPriority, seq)` — a pure function of the seed
   *     list + budgets, independent of partition count (the N vs 4N
   *     ordering-equality criterion),
@@ -62,8 +62,8 @@ object Engine {
       fam: Int, ipIdx: Int, ip: String)
   case class RoundStats(round: Int, admitted: Long, crawled: Long,
       deferred: Long, seconds: Double, discovered: Long = 0L,
-      /** Wall seconds per loop phase (seed/admit/filter_refs/budgets/
-        * select/crawl_plan/commit_results/commit_spans/discover/
+      /** Wall seconds per loop phase (seed/admit/filter_refs/select/
+        * crawl_plan/commit_results/commit_spans/discover/
         * commit_backlog/commit_count/commit_ckpt/compact) — frontier
         * rounds are latency-bound on fixed per-round costs at
         * politeness-bounded sizes, so the breakdown is first-class
@@ -289,27 +289,6 @@ class Engine(
       * budgets) always come from `universe`.
       */
     probeService: graft.probes.ProbeService = null,
-    /** Guards for the per-round driver-side selection materialization: the
-      * driver path collects the distinct nameserver buckets and the
-      * politeness-bounded selected set (≤ Σ budgets rows) once per round —
-      * the cheapest shape in Spark jobs at reference-zone scale (thousands
-      * of providers). When bucket cardinality exceeds `maxDriverBuckets`
-      * OR the Σ-budgets bound exceeds `maxDriverSelectRows`, the round
-      * switches to the distributed fallback ([[selectDistributed]]):
-      * budgets/salts ride a broadcast join, ranking stays in windows, and
-      * pop_rank derives from per-bucket offsets — bit-identical output
-      * (SelectPathSpec), flat driver memory at 100× provider cardinality.
-      *
-      * Defaults are MEASURED, not guessed (SelectScaleBench, BENCH.md):
-      * the driver path's `typedlit` budget/salt maps are plan literals,
-      * and at 10^5 buckets the literal-map plan already costs 130 s vs
-      * the fallback's 6.5 s (905 s and +742 MB driver heap at 10^6) —
-      * so the bucket guard sits at 8192, far below where the literal
-      * cost bites, while reference-zone cardinality (~40 providers,
-      * thousands at 100×) stays comfortably on the cheaper driver path.
-      */
-    maxDriverBuckets: Int = 8192,
-    maxDriverSelectRows: Long = 2000000L,
     /** Timestamp source for result documents — fixed by default for
       * determinism, [[Engine.Clock.utcWall]] for reference-faithful wall
       * time (see [[Engine.Clock]]).
@@ -561,50 +540,8 @@ class Engine(
 
   // ------------------------------------------------------- politeness
 
-  /** Deterministic per-round admission under per-bucket budgets: the
-    * relational twin of [[FrontierHeap.popRound]] — top-budget(bucket) rows
-    * by (priority, seq, canonical) per bucket. Identical at any parallelism
-    * because every input is deterministic.
-    *
-    * Two-phase rank so a hot bucket never sorts its whole frontier on one
-    * reducer: phase 1 ranks within (bucket, salt) cells — an entry past the
-    * budget inside ANY subset containing it is past the budget globally, so
-    * pruning to the per-cell top-budget is lossless — leaving ≤ salt×budget
-    * survivors per bucket for the exact phase-2 re-rank. Budgets ship as a
-    * literal map (codegen'd element_at), and the additional
-    * `_r1 <= maxBudget` literal conjunct lets Spark's WindowGroupLimit
-    * prune inside the phase-1 sort.
-    */
-  private[graft] def selectUnderBudget(frontier: Dataset[FrontierEntry],
-      budgets: Map[Int, Int], defaultBudget: Int)
-      : (Dataset[FrontierEntry], Dataset[FrontierEntry]) = {
-    val maxBudget = (budgets.values ++ Seq(defaultBudget)).max
-    def budgetOf = coalesce(element_at(typedlit(budgets), col("nsBucket")),
-      lit(defaultBudget))
-    val salts = saltCounts(frontier)
-    val saltOf = coalesce(element_at(typedlit(salts), col("nsBucket")), lit(1))
-    val w1 = Window.partitionBy(col("nsBucket"), pmod(col("key"), saltOf))
-      .orderBy(col("priority"), col("seq"), col("canonical"))
-    val survivors = frontier
-      .withColumn("_r1", row_number().over(w1))
-      .where(col("_r1") <= lit(maxBudget) && col("_r1") <= budgetOf)
-      .drop("_r1")
-    val w2 = Window.partitionBy(col("nsBucket"))
-      .orderBy(col("priority"), col("seq"), col("canonical"))
-    val sel = survivors
-      .withColumn("_rank", row_number().over(w2))
-      .where(col("_rank") <= budgetOf)
-      .drop("_rank").as[FrontierEntry]
-    val deferred = frontier
-      .join(sel.select(col("canonical").as("_selc")),
-        col("canonical") === col("_selc"), "left_anti")
-      .as[FrontierEntry]
-    (sel, deferred)
-  }
-
-  /** One round's selection outcome, path-independent: the crawl/commit
-    * code downstream never knows whether the driver path or the
-    * distributed fallback produced it.
+  /** One round's selection: the entries popped this round, each with its
+    * global pop rank, and the entries deferred to later rounds.
     */
   private[graft] case class RoundSelection(
       selected: Dataset[FrontierEntry],
@@ -619,70 +556,81 @@ class Engine(
       perPartition: Map[Int, Long],
       release: () => Unit)
 
-  /** Distributed twin of the driver-path selection (the guarded fallback,
-    * forced by `maxDriverBuckets`/`maxDriverSelectRows`): budgets and salt
-    * counts ride a broadcast-joined DataFrame instead of plan-literal
-    * maps, the two-phase rank stays in windows, and pop_rank derives from
-    * per-bucket rank + cumulative bucket offsets — the same composition
-    * the driver path's global (nsBucket, priority, seq, canonical) sort
-    * produces, so both paths are bit-identical (SelectPathSpec). No driver
-    * structure scales with bucket cardinality or Σ budgets; the only
-    * driver-sized results are scalar aggregates and the
-    * ≤`frontierPartitions`-row throughput counters.
+  /** Deterministic per-round admission under per-bucket budgets: the
+    * first `budget(bucket)` entries of each nameserver bucket by
+    * `(priority, seq, canonical)`, ranked globally by `(nsBucket,
+    * priority, seq, canonical)`. Identical at any parallelism because
+    * every input is deterministic.
     *
-    * Budgets are evaluated executor-side via `universe.policyBudget`
-    * directly: the driver path's [[PolicyCache]] is a TTL memo over the
-    * same deterministic fetch, so both always agree.
+    * A bucket contributes exactly `min(count, budget)` rows, so one pass
+    * over the per-bucket frontier counts (one row per bucket, budgets
+    * evaluated on executors) yields everything the rank needs before it
+    * runs: the selected total (the loop's drain check), the largest
+    * budget, each bucket's salt, and each bucket's `pop_rank` offset (the
+    * rows all lower buckets contribute). That frame rides a broadcast
+    * join, so `pop_rank` = offset + in-bucket rank needs no second pass
+    * over the selected rows, and no driver structure grows with the
+    * bucket count.
+    *
+    * Two-phase rank so a hot bucket never sorts its whole frontier on one
+    * reducer: phase 1 ranks within (bucket, salt) cells — an entry past the
+    * budget inside ANY subset containing it is past the budget globally, so
+    * pruning to the per-cell top-budget is lossless — leaving ≤ salt×budget
+    * survivors per bucket for the exact phase-2 re-rank. The literal
+    * `_r1 <= maxBudget` conjunct lets Spark's WindowGroupLimit prune inside
+    * the phase-1 sort.
     */
-  private[graft] def selectDistributed(frontier: Dataset[FrontierEntry])
-      : RoundSelection = {
+  private[graft] def selectRound(frontier: Dataset[FrontierEntry]): RoundSelection = {
     val u = universe
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val counts = frontier.groupBy(col("nsBucket")).count().cache()
-    val total = counts.agg(sum(col("count"))).as[Option[Long]].head()
-      .getOrElse(0L).max(1L)
-    val target = math.max(1L, total / parts)
-    val meta = counts.as[(Int, Long)].map { case (b, c) =>
-      (b, u.policyBudget(b), math.max(1, math.ceil(c.toDouble / target).toInt))
-    }.toDF("mb", "budget", "salt")
-    val maxBudget = meta.agg(max(col("budget"))).head().getInt(0)
-    val fm = frontier.join(broadcast(meta), col("nsBucket") === col("mb"))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val byBucket = Window.orderBy(col("mb"))
+    val all = byBucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    // frequency-proportional salts, the formula of `saltCounts`
+    val target = greatest(lit(1L), floor(sum(col("count")).over(all) / lit(parts)))
+    val buckets = frontier.groupBy(col("nsBucket")).count().as[(Int, Long)]
+      .map { case (b, c) =>
+        val budget = u.policyBudget(b)
+        (b, c, budget, math.max(0L, math.min(c, budget.toLong))) // rows it contributes
+      }
+      .toDF("mb", "count", "budget", "take")
+      .select(col("mb"), col("budget"),
+        greatest(lit(1L), ceil(col("count") / target)).cast("int").as("salt"),
+        coalesce(sum(col("take")).over(
+          byBucket.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("offset"),
+        max(col("budget")).over(all).as("maxBudget"),
+        sum(col("take")).over(all).as("nSelected"))
+      .cache()
+    // an empty frontier has no buckets: nothing selected
+    val (maxBudget, nSelected) = buckets.select(col("maxBudget"), col("nSelected"))
+      .as[(Int, Long)].head(1).headOption.getOrElse((0, 0L))
+    val rankOrder = Seq(col("priority"), col("seq"), col("canonical"))
     val w1 = Window.partitionBy(col("nsBucket"), pmod(col("key"), col("salt")))
-      .orderBy(col("priority"), col("seq"), col("canonical"))
-    val survivors = fm
+      .orderBy(rankOrder: _*)
+    val w2 = Window.partitionBy(col("nsBucket")).orderBy(rankOrder: _*)
+    val ranked = frontier
+      .join(broadcast(buckets.select("mb", "budget", "salt", "offset")),
+        col("nsBucket") === col("mb"))
       .withColumn("_r1", row_number().over(w1))
       .where(col("_r1") <= lit(maxBudget) && col("_r1") <= col("budget"))
-      .drop("_r1")
-    val w2 = Window.partitionBy(col("nsBucket"))
-      .orderBy(col("priority"), col("seq"), col("canonical"))
-    val ranked = survivors
       .withColumn("_rank", row_number().over(w2))
       .where(col("_rank") <= col("budget"))
-      .drop("mb", "budget", "salt")
+      .withColumn("pop_rank", col("offset") + col("_rank"))
+      .drop("mb", "budget", "salt", "offset", "_r1", "_rank")
       .cache()
-    val selected = ranked.drop("_rank").as[FrontierEntry]
-    // The offsets window runs unpartitioned over ≤ #buckets rows — one
-    // executor task, never the driver.
-    val offs = ranked.groupBy(col("nsBucket")).count()
-      .withColumn("_off", coalesce(sum(col("count")).over(
-        Window.orderBy(col("nsBucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("nsBucket").as("ob"), col("_off"))
-    val withRank = ranked
-      .join(broadcast(offs), col("nsBucket") === col("ob"))
-      .withColumn("pop_rank", col("_off") + col("_rank"))
-      .drop("ob", "_off", "_rank")
+    val selected = ranked.drop("pop_rank").as[FrontierEntry]
     val deferred = frontier
       .join(ranked.select(col("canonical").as("_selc")),
         col("canonical") === col("_selc"), "left_anti")
       .as[FrontierEntry]
-    val nSelected = selected.count()
-    val fp = frontierPartitions
-    val perPartition = selected
-      .groupBy(pmod(col("key"), lit(fp.toLong)).cast("int").as("pid"))
-      .count().as[(Int, Long)].collect().toMap
-    RoundSelection(selected, withRank, deferred, nSelected, perPartition,
-      release = () => { ranked.unpersist(); counts.unpersist(); () })
+    // an RDD count: one Spark job, where a DataFrame groupBy adds an
+    // AQE shuffle job
+    val fp = frontierPartitions.toLong
+    val perPartition =
+      if (nSelected == 0) Map.empty[Int, Long]
+      else ranked.select(pmod(col("key"), lit(fp)).cast("int")).as[Int].rdd
+        .countByValue().toMap
+    RoundSelection(selected, ranked, deferred, nSelected, perPartition,
+      release = () => { ranked.unpersist(); buckets.unpersist(); () })
   }
 
   // ------------------------------------------------------------ crawl
@@ -883,8 +831,6 @@ class Engine(
     * after any round and re-invoke: resumes from the committed snapshot.
     */
   def run(docs: Dataset[Doc], maxRounds: Int = Int.MaxValue): Seq[RoundStats] = {
-    val u = universe
-    val policy = new PolicyCache(ttlRounds = 16)
     val seeds = extractSeeds(docs).cache()
     val stats = scala.collection.mutable.ArrayBuffer.empty[RoundStats]
 
@@ -938,52 +884,8 @@ class Engine(
         .getOrElse(spark.emptyDataset[FrontierEntry])
       val frontier = admitted.unionByName(backlog).cache()
 
-      // 4. politeness: budgets from the TTL'd zone-policy cache. Guarded
-      // two-path selection (see the maxDriverBuckets constructor doc):
-      // the driver path collects the ≤ Σ-budgets selected set once per
-      // round (fewest Spark jobs — the loop is job-count-bound at
-      // politeness-bounded sizes); past the guards, the distributed
-      // fallback keeps driver memory flat. Bit-identical outputs
-      // (SelectPathSpec).
-      val bucketSample = timed("budgets")(frontier.select("nsBucket").distinct()
-        .limit(maxDriverBuckets + 1).as[Int].collect())
-      val driverBudgets =
-        if (bucketSample.length > maxDriverBuckets) None
-        else {
-          val m = bucketSample.iterator
-            .map(b => b -> policy.get(b, round, u.policyBudget)).toMap
-          Option.when(m.valuesIterator.map(_.toLong).sum <= maxDriverSelectRows)(m)
-        }
-      val sel = timed("select")(driverBudgets match {
-        case Some(budgets) =>
-          val (selected0, deferred0) = selectUnderBudget(frontier, budgets, 64)
-          val selected = selected0.cache()
-          // ONE driver-side materialization of the bounded selected set
-          // (≤ Σ budgets rows — checked against maxDriverSelectRows
-          // above): the selected count, global pop order and
-          // per-partition throughput counters all derive from these rows.
-          val selRows = selected
-            .map(e => (e.canonical, e.nsBucket, e.priority, e.seq, e.key))
-            .collect()
-          // deterministic pop order: (nsBucket, priority, seq, canonical)
-          // ascending — one local sort over the bounded rows, attached to
-          // the narrow entry rows by a broadcast join (the side is
-          // bounded by Σ budgets).
-          val ordered = selRows.sortBy { case (c, b, p, s, _) => (b, p, s, c) }
-          val popOrder = broadcast(spark.createDataset(
-            ordered.iterator.zipWithIndex
-              .map { case ((c, _, _, _, _), i) => (c, i + 1L) }.toSeq)
-            .toDF("o_domain", "pop_rank"))
-          val ranked = selected.join(popOrder, col("canonical") === col("o_domain"))
-            .drop("o_domain")
-          val fp = frontierPartitions
-          val perPartition = selRows
-            .groupBy(r => Math.floorMod(r._5, fp.toLong).toInt)
-            .map { case (pid, rs) => (pid, rs.length.toLong) }
-          RoundSelection(selected, ranked, deferred0, selRows.length.toLong,
-            perPartition, release = () => { selected.unpersist(); () })
-        case None => selectDistributed(frontier)
-      })
+      // 4. politeness: this round's entries under per-bucket budgets
+      val sel = timed("select")(selectRound(frontier))
       val selected = sel.selected
       val deferred = sel.deferred // consumed once (backlog commit) — no cache
       val nSelected = sel.nSelected

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, LogicalPlan, SerializeFromObject}
@@ -28,6 +29,12 @@ class EngineSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val u = new TightBudgetUniverse(42L)
+
+  /** Spark jobs one round selection runs (`Engine.selectRound`): the
+    * per-bucket plan with its scalars, the broadcast of that plan, the
+    * two rank windows and the per-partition counters.
+    */
+  private val SelectJobs = 9
 
   /** Seed corpus: interleaved docs whose text spans carry domains (with
     * planted case/trailing-dot/IDN/duplicate variants via
@@ -193,6 +200,35 @@ class EngineSpec extends AnyFunSuite {
     newEngine(dirResume, chunk = 12).run(docs)
 
     assert(resultKeys(newEngine(dirFull)) == resultKeys(newEngine(dirResume)))
+  }
+
+  test("the round selection runs a pinned number of Spark jobs") {
+    val eng = newEngine(graft.TmpDirs.create("engine-seljobs").toString)
+    val frontier = eng.toFrontier(spark.createDataset(
+      (0 until 300).map(i => (u.seedDomain(i.toLong), i.toLong)))).cache()
+    frontier.count()
+    val sc = spark.sparkContext
+    val group = "select-jobs-" + System.nanoTime()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "round selection")
+    val sel =
+      try eng.selectRound(frontier)
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    try {
+      // budgets 12/25 defer part of the frontier
+      assert(sel.nSelected > 0 && sel.nSelected < frontier.count())
+      assert(jobs.get == SelectJobs, s"selection ran ${jobs.get} jobs")
+    } finally { sel.release(); frontier.unpersist() }
   }
 
   test("crawlEntries task count: size hint clamps between one wave and the 8x ceiling") {

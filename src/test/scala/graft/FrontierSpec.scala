@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.frontier.{FrontierHeap, PolicyCache, TokenBucket}
+import graft.frontier.FrontierHeap
 import graft.model.Model.FrontierEntry
 
 class FrontierSpec extends AnyFunSuite {
@@ -33,30 +33,5 @@ class FrontierSpec extends AnyFunSuite {
     // deferred entries come out first next round, same order
     val next = h.popRound(_ => 2)
     assert(next.map(_.domain) == Vector("x4", "x5"))
-  }
-
-  test("token bucket: capacity bound and refill") {
-    val tb = new TokenBucket(capacity = 2, refillPerRound = 1)
-    assert(tb.tryTake()); assert(tb.tryTake()); assert(!tb.tryTake())
-    tb.tick()
-    assert(tb.tryTake()); assert(!tb.tryTake())
-    tb.tick(); tb.tick(); tb.tick()
-    assert(tb.available == 2.0) // capped at capacity
-  }
-
-  test("policy cache: TTL expiry and refresh-on-read (dns_utils.py:237-241)") {
-    var fetches = 0
-    val c = new PolicyCache(ttlRounds = 3)
-    def fetch(b: Int): Int = { fetches += 1; 100 + b }
-    assert(c.get(7, round = 0, fetch) == 107)
-    assert(fetches == 1)
-    // read at round 2 refreshes: expiry pushed to round 5
-    assert(c.get(7, round = 2, fetch) == 107)
-    assert(fetches == 1)
-    assert(c.get(7, round = 4, fetch) == 107) // still alive due to refresh
-    assert(fetches == 1)
-    // let it lapse: last refresh at 4 → expires at 7
-    assert(c.get(7, round = 8, fetch) == 107)
-    assert(fetches == 2) // re-fetched after expiry
   }
 }

@@ -6,9 +6,11 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.{col, to_json, xxhash64}
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
+import graft.frontier.FrontierHeap
 import graft.model.Model._
 import graft.probes.ForwardingProbeService
 import graft.universe.Universe
@@ -39,6 +41,11 @@ object CountingProbeService {
   }
 }
 
+/** Budgets from a table; buckets it does not name get 0. */
+class TableBudgetUniverse(budgets: Map[Int, Int]) extends Universe(42L) {
+  override def policyBudget(nsBucket: Int): Int = budgets.getOrElse(nsBucket, 0)
+}
+
 class SelectPathSpec extends AnyFunSuite {
 
   private val spark = SparkSessionFixture.spark
@@ -67,35 +74,76 @@ class SelectPathSpec extends AnyFunSuite {
         xxhash64(to_json(col("result"))).as("h"))
       .as[(String, Int, Long, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
 
-  test("distributed selection fallback (guards forced to 0) is bit-identical to the driver path, discovery on") {
-    val svc = new LinkPlantingService(u)
-    def run(forceFallback: Boolean): (Seq[(String, Int, Long, Long)], Seq[Engine.RoundStats]) = {
-      val dir = graft.TmpDirs.create("selpath").toString
-      val eng = new Engine(spark, u, cfg = contentCfg, workDir = dir,
-        frontierPartitions = 8, probeService = svc,
-        discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1),
-        maxDriverBuckets = if (forceFallback) 0 else 100000,
-        maxDriverSelectRows = if (forceFallback) 0L else 5000000L)
-      val stats = eng.run(seedDocs(60))
-      (digest(eng), stats)
+  /** A frontier with hot buckets, (priority, seq) ties and keys of both
+    * signs, plus a budget per bucket drawn both below and above its
+    * count (0 included).
+    */
+  private val genCase: Gen[(Seq[FrontierEntry], Map[Int, Int])] = for {
+    nBuckets <- Gen.choose(1, 6)
+    n <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 240))
+    entries <- Gen.listOfN(n, for {
+      b <- Gen.frequency(8 -> Gen.const(0), 2 -> Gen.choose(0, nBuckets - 1))
+      prio <- Gen.choose(0, 3)
+      seq <- Gen.choose(0L, 12L)
+      key <- Gen.long
+    } yield (b, prio, seq, key))
+    budgets <- Gen.listOfN(nBuckets, Gen.frequency(
+      1 -> Gen.const(0), 4 -> Gen.choose(1, 20), 2 -> Gen.choose(20, 300)))
+  } yield {
+    // canonical names unique, in an order unrelated to (priority, seq)
+    val es = entries.zipWithIndex.map { case ((b, prio, seq, key), i) =>
+      val d = s"d${(i * 7919) % 1000}x$i.cz"
+      FrontierEntry(d, d, key, b, prio, seq)
     }
-    val (driverRes, driverStats) = run(forceFallback = false)
-    val (fallbackRes, fallbackStats) = run(forceFallback = true)
-    assert(fallbackRes == driverRes)
-    assert(driverRes.nonEmpty)
-    // round accounting must agree too: crawled/deferred/discovered per round
-    assert(fallbackStats.map(s => (s.round, s.admitted, s.crawled, s.deferred, s.discovered))
-      == driverStats.map(s => (s.round, s.admitted, s.crawled, s.deferred, s.discovered)))
-    // the run actually exercised multi-round deferral + discovery
-    assert(driverStats.exists(_.discovered > 0))
+    (es, budgets.zipWithIndex.map { case (v, b) => b -> v }.toMap)
   }
 
-  test("fallback resume: interrupt after round 1 under forced fallback, resume — identical to uninterrupted fallback run") {
+  /** The one selection against the reference heap: the selected set, each
+    * entry's pop_rank as its position in `popRound` order, the deferred
+    * set, and the counters the loop reads.
+    */
+  private def matchesHeap(es: Seq[FrontierEntry], budgets: Map[Int, Int]): Boolean = {
+    val eng = new Engine(spark, new TableBudgetUniverse(budgets),
+      workDir = graft.TmpDirs.create("selprop").toString, frontierPartitions = 8)
+    val heap = new FrontierHeap
+    heap.pushAll(es)
+    val popped = heap.popRound(b => budgets.getOrElse(b, 0))
+    val sel = eng.selectRound(spark.createDataset(es))
+    try {
+      val ranked = sel.ranked.select("canonical", "pop_rank").as[(String, Long)]
+        .collect().sortBy(_._2).toSeq
+      ranked == popped.map(_.canonical).zipWithIndex.map { case (c, i) => (c, i + 1L) } &&
+        sel.selected.collect().toSet == popped.toSet &&
+        sel.deferred.collect().toSet == heap.queued.toSet &&
+        sel.nSelected == popped.size &&
+        sel.perPartition == popped.groupBy(e => Math.floorMod(e.key, 8L).toInt)
+          .map { case (p, g) => p -> g.size.toLong }
+    } finally sel.release()
+  }
+
+  test("round selection equals the reference heap's popRound on generated frontiers") {
+    val prop = Prop.forAll(genCase) { case (es, budgets) => matchesHeap(es, budgets) }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("selecting from an empty frontier returns 0 rows") {
+    val eng = new Engine(spark, u, workDir = graft.TmpDirs.create("selempty").toString,
+      frontierPartitions = 8)
+    val sel = eng.selectRound(spark.emptyDataset[FrontierEntry])
+    try {
+      assert(sel.nSelected == 0L)
+      assert(sel.ranked.count() == 0L)
+      assert(sel.deferred.count() == 0L)
+      assert(sel.perPartition.isEmpty)
+    } finally sel.release()
+  }
+
+  test("resume after round 1 reproduces the uninterrupted result tree, discovery on") {
     val svc = new LinkPlantingService(u)
     def mk(dir: String) = new Engine(spark, u, cfg = contentCfg, workDir = dir,
       frontierPartitions = 8, probeService = svc,
-      discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1),
-      maxDriverBuckets = 0, maxDriverSelectRows = 0L)
+      discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
     val dirFull = graft.TmpDirs.create("selpath-full").toString
     val engFull = mk(dirFull)
     engFull.run(seedDocs(40))
