@@ -62,10 +62,10 @@ object DiscoveryBench {
     val eng = new Engine(spark, u, workDir = dir, frontierPartitions = 32,
       seedChunkSize = nDomains,
       // seen-filter capacity sized to the run's keys (~3× seeds with
-      // depth-1 discovery) at the BENCH.md 2× headroom rule: snapshot
-      // bytes are capacity-proportional (slots serialize whether occupied
-      // or not), so the library default 2^20/partition would write
-      // ~270 MB of snapshots per round for a 60k-key run
+      // depth-1 discovery) at the BENCH.md 2× headroom rule. Snapshot
+      // bytes follow occupancy, so the library default would store no
+      // more; the capacity stays because the filter geometry (and with
+      // it every fingerprint collision) feeds the recorded digests
       filterCapacityPerPartition =
         math.max(1L << 14, java.lang.Long.highestOneBit(nDomains.toLong * 6 / 32) * 2),
       discovery = Engine.DiscoveryConfig.on.copy(maxDepth = maxDepth))

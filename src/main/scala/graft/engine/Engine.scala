@@ -64,7 +64,7 @@ object Engine {
       deferred: Long, seconds: Double, discovered: Long = 0L,
       /** Wall seconds per loop phase (seed/admit/filter_refs/select/
         * crawl_plan/commit_results/commit_spans/discover/
-        * commit_backlog/commit_count/commit_ckpt/compact) — frontier
+        * commit_backlog/commit_ckpt/compact) — frontier
         * rounds are latency-bound on fixed per-round costs at
         * politeness-bounded sizes, so the breakdown is first-class
         * observability, not debug output. `crawl_plan` builds the probe
@@ -399,13 +399,22 @@ class Engine(
 
   private def filterDir(round: Int) = s"$workDir/filters/r$round"
 
+  /** The committed checkpoint's round, seed watermark and snapshot refs
+    * (partitions that have one), from one collect; `(0, -1, {})` before
+    * the first commit.
+    */
+  private def committedState(): (Int, Long, Map[Int, String]) = {
+    val rows = checkpointT.read().toSeq.flatMap(_.select(col("partition_id"),
+        col("seen_filter_snapshot_ref"), element_at(col("fetch_counters"), "round"),
+        col("offset_watermark"))
+      .as[(Int, String, Long, Long)].collect())
+    if (rows.isEmpty) (0, -1L, Map.empty)
+    else (rows.map(_._3).max.toInt, rows.map(_._4).max,
+      rows.collect { case (pid, ref, _, _) if ref.nonEmpty => pid -> ref }.toMap)
+  }
+
   /** The committed checkpoint's snapshot refs (partitions that have one). */
-  private def loadFilterRefs(): Map[Int, String] =
-    checkpointT.read() match {
-      case None => Map.empty
-      case Some(df) => df.select("partition_id", "seen_filter_snapshot_ref")
-        .as[(Int, String)].collect().toMap.filter(_._2.nonEmpty)
-    }
+  private def loadFilterRefs(): Map[Int, String] = committedState()._3
 
   /** Distributed seen-check + filter update. Entries are co-partitioned
     * with their filter (`pmod(key, P)`); each partition's filter is read,
@@ -552,6 +561,11 @@ class Engine(
       ranked: DataFrame,
       deferred: Dataset[FrontierEntry],
       nSelected: Long,
+      /** `deferred`'s row count: each bucket defers `count − min(count,
+        * budget)` rows (the frontier holds each canonical once). Comes
+        * from an action result, so task retries cannot inflate it.
+        */
+      nDeferred: Long,
       /** frontier-partition id → selected count (≤ frontierPartitions rows). */
       perPartition: Map[Int, Long],
       release: () => Unit)
@@ -565,12 +579,12 @@ class Engine(
     * A bucket contributes exactly `min(count, budget)` rows, so one pass
     * over the per-bucket frontier counts (one row per bucket, budgets
     * evaluated on executors) yields everything the rank needs before it
-    * runs: the selected total (the loop's drain check), the largest
-    * budget, each bucket's salt, and each bucket's `pop_rank` offset (the
-    * rows all lower buckets contribute). That frame rides a broadcast
-    * join, so `pop_rank` = offset + in-bucket rank needs no second pass
-    * over the selected rows, and no driver structure grows with the
-    * bucket count.
+    * runs: the selected and deferred totals (the loop's drain check and
+    * counter), the largest budget, each bucket's salt, and each bucket's
+    * `pop_rank` offset (the rows all lower buckets contribute). That frame
+    * rides a broadcast join, so `pop_rank` = offset + in-bucket rank needs
+    * no second pass over the selected rows, and no driver structure grows
+    * with the bucket count.
     *
     * Two-phase rank so a hot bucket never sorts its whole frontier on one
     * reducer: phase 1 ranks within (bucket, salt) cells — an entry past the
@@ -598,11 +612,13 @@ class Engine(
         coalesce(sum(col("take")).over(
           byBucket.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("offset"),
         max(col("budget")).over(all).as("maxBudget"),
-        sum(col("take")).over(all).as("nSelected"))
+        sum(col("take")).over(all).as("nSelected"),
+        sum(col("count")).over(all).as("nFrontier"))
       .cache()
     // an empty frontier has no buckets: nothing selected
-    val (maxBudget, nSelected) = buckets.select(col("maxBudget"), col("nSelected"))
-      .as[(Int, Long)].head(1).headOption.getOrElse((0, 0L))
+    val (maxBudget, nSelected, nFrontier) =
+      buckets.select(col("maxBudget"), col("nSelected"), col("nFrontier"))
+        .as[(Int, Long, Long)].head(1).headOption.getOrElse((0, 0L, 0L))
     val rankOrder = Seq(col("priority"), col("seq"), col("canonical"))
     val w1 = Window.partitionBy(col("nsBucket"), pmod(col("key"), col("salt")))
       .orderBy(rankOrder: _*)
@@ -629,7 +645,7 @@ class Engine(
       if (nSelected == 0) Map.empty[Int, Long]
       else ranked.select(pmod(col("key"), lit(fp)).cast("int")).as[Int].rdd
         .countByValue().toMap
-    RoundSelection(selected, ranked, deferred, nSelected, perPartition,
+    RoundSelection(selected, ranked, deferred, nSelected, nFrontier - nSelected, perPartition,
       release = () => { ranked.unpersist(); buckets.unpersist(); () })
   }
 
@@ -834,12 +850,9 @@ class Engine(
     val seeds = extractSeeds(docs).cache()
     val stats = scala.collection.mutable.ArrayBuffer.empty[RoundStats]
 
-    var round = checkpointT.read()
-      .map(df => df.agg(max(element_at(col("fetch_counters"), "round"))).as[Long].head().toInt)
-      .getOrElse(0)
-    var watermark: Long = checkpointT.read()
-      .map(df => df.agg(max(col("offset_watermark"))).as[Long].head())
-      .getOrElse(-1L)
+    // the checkpoint is read once per run: each later round starts from
+    // the refs the round before it committed
+    var (round, watermark, committedRefs) = committedState()
     // resume hygiene: a prior attempt may have died between snapshot
     // writes and its checkpoint commit — those dirs are uncommitted state
     dropUncommittedFilterDirs(round)
@@ -868,9 +881,7 @@ class Engine(
       val chunk = seeds.where(col("seq") > watermark && col("seq") <= newWatermark).cache()
 
       // 2. canonical dedup + seen-filter admission against the committed
-      // snapshots (read once: the checkpoint only changes at round end);
-      // the count materializes this round's snapshots
-      val committedRefs = timed("filter_refs")(loadFilterRefs())
+      // snapshots; the count materializes this round's snapshots
       val fresh = toFrontier(chunk)
       val (admitted, nAdmitted) = timed("admit") {
         val a = admitUnseenInto(fresh, committedRefs, filterDir(round)).cache()
@@ -979,16 +990,10 @@ class Engine(
             e.nsBucket, e.priority, e.seq, e.depth, active = true)).toDF()
             .unionByName(selected.map(e => BacklogRow(e.domain, e.canonical,
               e.key, e.nsBucket, e.priority, e.seq, e.depth, active = false)).toDF())
-        val backlogV = timed("commit_backlog")(backlogT.mergeCommit((discBacklog match {
+        timed("commit_backlog")(backlogT.mergeCommit((discBacklog match {
           case Some(d) => backlogUpdates.unionByName(d.toDF())
           case None => backlogUpdates
         }).coalesce(writeParts)))
-        // deferred count derived from the committed delta (its rows are
-        // exactly deferred(active) + selected(inactive) + discoveries):
-        // exact under task retries, unlike a map-side accumulator, and
-        // the footer-count of the fresh narrow delta is one tiny job
-        val nDeferred =
-          timed("commit_count")(backlogT.commitRowCount(backlogV)) - nSelected - nDiscovered
         discCached.foreach(_.unpersist())
         if (multiPassUnsafe) probed.unpersist()
         // per-partition throughput: crawled count per frontier partition
@@ -1004,7 +1009,7 @@ class Engine(
           PartitionLineage(pid, newWatermark,
             finalRefs.getOrElse(pid, ""),
             Map("round" -> round.toLong, "admitted" -> nAdmitted,
-              "crawled" -> nCrawled, "deferred" -> nDeferred,
+              "crawled" -> nCrawled, "deferred" -> sel.nDeferred,
               "discovered" -> nDiscovered,
               "partition_crawled" -> perPartition.getOrElse(pid, 0L),
               "partition_per_sec" ->
@@ -1012,9 +1017,9 @@ class Engine(
         }
         timed("commit_ckpt")(checkpointT.mergeCommit(
           spark.createDataset(lineage).toDF().coalesce(1)))
-        // bound the merge-on-read delta chains: backlog and checkpoint are
-        // re-read EVERY round (frontier build, filter refs), so their
-        // per-round read cost otherwise grows linearly with round count —
+        // bound the merge-on-read delta chains: the backlog is re-read
+        // every round (frontier build) and the checkpoint at every run's
+        // start, so their read cost otherwise grows linearly with rounds —
         // the same reason Iceberg schedules its rewrite (compaction)
         // action on hot tables. Results/spans are only read after the run;
         // they stay append-only.
@@ -1022,7 +1027,8 @@ class Engine(
           timed("compact") { backlogT.compact(); checkpointT.compact() }
 
         watermark = newWatermark
-        stats += RoundStats(round, nAdmitted, nCrawled, nDeferred,
+        committedRefs = finalRefs
+        stats += RoundStats(round, nAdmitted, nCrawled, sel.nDeferred,
           (System.nanoTime() - t0) / 1e9, nDiscovered, phaseT.toMap)
       }
       chunk.unpersist(); admitted.unpersist(); frontier.unpersist()

@@ -15,7 +15,8 @@ import graft.ops.TextOps.mix64
   *     state, which is why this scales where a `Set[String]` (≈60 B/key →
   *     600 GB) cannot;
   *   - **snapshot/merge**: `serialize`/`deserialize` round-trip bit-exact
-  *     for checkpoint refs; `merge` unions two filters (used when the
+  *     for checkpoint refs, in bytes that follow the occupied slots rather
+  *     than the capacity; `merge` unions two filters (used when the
   *     frontier is repartitioned).
   *
   * Keys are xxHash64/splitmix64 values of canonicalized punycode domains —
@@ -38,6 +39,9 @@ final class CuckooFilter private (
   import CuckooFilter._
 
   def size: Long = count
+
+  /** The stash's `(home bucket << 16 | fp)` entries, in insertion order. */
+  private[frontier] def stashEntries: Seq[Long] = stash.toSeq
 
   /** Canonical stash key: the smaller of the fp's two buckets (bucket2 is
     * a xor involution on the power-of-two bucket space, so both buckets
@@ -132,14 +136,38 @@ final class CuckooFilter private (
     ok
   }
 
-  /** Bit-exact snapshot:
-    * [numBuckets:int][count:long][stashLen:int][stash:long*][slots:short*].
+  /** Bit-exact snapshot whose size follows the occupied slots, not the
+    * capacity:
+    *
+    *   `[magic:int][numBuckets:int][count:long][stashLen:int][stash:long*][body]`
+    *
+    * The body is whichever of two forms is smaller, named by the magic:
+    * sparse — `(slot:int, fp:short)` per occupied slot, in slot order — or
+    * dense — every slot as a `short`. Every insert lands in exactly one
+    * slot or the stash, so the occupied-slot count is `count − stashLen`
+    * and the choice is O(1): sparse costs 6 B per occupied slot against
+    * dense's 2 B per slot, so it wins below 1/3 slot load.
     */
   def serialize(): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 8 + 4 + stash.length * 8 + buckets.length * 2)
-    bb.putInt(numBuckets).putLong(count).putInt(stash.length)
+    val occupied = count - stash.length
+    val sparse = 3 * occupied < buckets.length
+    val body = if (sparse) 6 * occupied else 2L * buckets.length
+    val bb = java.nio.ByteBuffer.allocate(
+      Math.toIntExact(HeaderBytes + stash.length * 8L + body))
+    bb.putInt(if (sparse) SparseMagic else DenseMagic)
+      .putInt(numBuckets).putLong(count).putInt(stash.length)
     stash.foreach(bb.putLong)
-    buckets.foreach(bb.putShort)
+    if (sparse) {
+      var i = 0
+      while (i < buckets.length) {
+        val fp = buckets(i)
+        if (fp != 0) bb.putInt(i).putShort(fp)
+        i += 1
+      }
+      if (bb.hasRemaining)
+        throw new IllegalStateException(
+          s"cuckoo snapshot: ${bb.remaining / 6} fewer occupied slots than count − stash")
+    } else bb.asShortBuffer().put(buckets)
     bb.array()
   }
 
@@ -185,6 +213,14 @@ object CuckooFilter {
   val MaxKicks = 500
   val StashWarn = 128
 
+  /** Snapshot magics: negative, so never a legacy snapshot's leading
+    * `numBuckets` (a positive power of two).
+    */
+  private val SparseMagic = 0xc0cf0001
+  private val DenseMagic = 0xc0cf0002
+  /** magic + numBuckets + count + stashLen */
+  private val HeaderBytes = 4 + 4 + 8 + 4
+
   /** Per-partition capacity ceiling: the Int-indexed bucket array bounds
     * one filter at 2^30 slots (~10^9 keys). At larger capacities shard
     * across more frontier partitions (the engine already partitions by
@@ -204,17 +240,27 @@ object CuckooFilter {
     new CuckooFilter(nb.toInt, new Array[Short]((nb * SlotsPerBucket).toInt), 0L)
   }
 
+  /** Reads both [[CuckooFilter.serialize]] forms and the legacy
+    * headerless dense layout
+    * `[numBuckets:int][count:long][stashLen:int][stash:long*][slots:short*]`.
+    */
   def deserialize(bytes: Array[Byte]): CuckooFilter = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
-    val nb = bb.getInt
+    val lead = bb.getInt
+    val sparse = lead == SparseMagic
+    if (lead < 0 && !sparse && lead != DenseMagic)
+      throw new IllegalArgumentException(f"cuckoo snapshot: unknown magic 0x$lead%08x")
+    val nb = if (lead < 0) bb.getInt else lead
     val cnt = bb.getLong
     val stashLen = bb.getInt
     val stash = scala.collection.mutable.ArrayBuffer.empty[Long]
     var j = 0
     while (j < stashLen) { stash += bb.getLong; j += 1 }
     val arr = new Array[Short](nb * SlotsPerBucket)
-    var i = 0
-    while (i < arr.length) { arr(i) = bb.getShort; i += 1 }
+    if (sparse) {
+      var k = cnt - stashLen
+      while (k > 0) { arr(bb.getInt) = bb.getShort; k -= 1 }
+    } else bb.asShortBuffer().get(arr)
     new CuckooFilter(nb, arr, cnt, stash)
   }
 }

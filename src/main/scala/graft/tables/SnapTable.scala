@@ -71,21 +71,6 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     v
   }
 
-  /** Row count of one committed delta directory (parquet-footer scan of a
-    * single version's files — cheap). Lets callers derive per-commit
-    * counters from the committed data instead of task-side accumulators,
-    * which Spark only guarantees exactly-once for actions: a retried or
-    * speculatively-executed task would double-count an accumulator, but
-    * the committed delta is written exactly once. NOTE the delta contains
-    * the input DataFrame's rows AS-IS — mergeCommit does no per-key dedup
-    * (key resolution happens at read time) — so arithmetic over
-    * commitRowCount (e.g. Engine's nDeferred = commitRowCount − nSelected
-    * − nDiscovered) is valid only when the caller's inputs are
-    * key-disjoint, which the engine's seen-set invariants guarantee.
-    */
-  def commitRowCount(version: Int): Long =
-    spark.read.parquet(rootP.resolve(s"data/v$version").toString).count()
-
   /** Snapshot read with MERGE resolution (latest commit wins per key). */
   def read(asOfVersion: Option[Int] = None): Option[DataFrame] = {
     val v = asOfVersion.orElse(currentVersion).getOrElse(return None)

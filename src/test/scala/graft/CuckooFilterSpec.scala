@@ -1,9 +1,10 @@
 package graft
 
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.frontier.CuckooFilter
+import graft.frontier.{CuckooFilter, CuckooSnapshots}
 
 class CuckooFilterSpec extends AnyFunSuite {
 
@@ -31,6 +32,61 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(g.size == f.size)
     keys.foreach(k => assert(g.contains(k)))
     assert(java.util.Arrays.equals(g.serialize(), bytes)) // round-trip stable
+  }
+
+  /** A filter of `capacity` with `keys` inserted. */
+  private def filled(capacity: Int, keys: Seq[Long]): CuckooFilter = {
+    val f = CuckooFilter.create(capacity)
+    keys.foreach(f.insert)
+    f
+  }
+
+  private def sameFilter(a: CuckooFilter, b: CuckooFilter): Boolean =
+    a.numBuckets == b.numBuckets && a.size == b.size &&
+      java.util.Arrays.equals(a.buckets, b.buckets) &&
+      CuckooSnapshots.stash(a) == CuckooSnapshots.stash(b)
+
+  test("property: snapshots round-trip and are sized by occupancy (load 0 to overfull)") {
+    // key counts as fractions of the slot count: empty, low load, around
+    // the 1/3 sparse/dense crossover, and past full (stash entries)
+    val gen = for {
+      capacity <- Gen.oneOf(50, 200, 1000)
+      slots = CuckooFilter.create(capacity).buckets.length
+      n <- Gen.oneOf(Gen.const(0), Gen.choose(1, slots / 10),
+        Gen.choose(slots / 3 - 8, slots / 3 + 8), Gen.choose(slots, 2 * slots))
+      keys <- Gen.listOfN(n, Gen.long)
+    } yield (capacity, keys)
+    val prop = Prop.forAll(gen) { case (capacity, keys) =>
+      val f = filled(capacity, keys)
+      val bytes = f.serialize()
+      val g = CuckooFilter.deserialize(bytes)
+      val stashLen = CuckooSnapshots.stash(f).length
+      val occupied = f.buckets.count(_ != 0)
+      val legacy = CuckooSnapshots.legacyBytes(f).length
+      val expected = 20 + 8 * stashLen + math.min(6 * occupied, 2 * f.buckets.length)
+      Prop.all(
+        "round trip" |: sameFilter(f, g),
+        "stable" |: java.util.Arrays.equals(g.serialize(), bytes),
+        "occupied = count - stash" |: f.size - stashLen == occupied,
+        s"size ${bytes.length} is the smaller form $expected" |: bytes.length == expected,
+        s"size ${bytes.length} <= legacy $legacy + magic" |: bytes.length <= legacy + 4)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("legacy headerless snapshots read back to the same filter") {
+    val low = filled(1000, (0 until 100).map(i => graft.ops.TextOps.mix64(i.toLong)))
+    val overfull = filled(100, (0 until 400).map(i => graft.ops.TextOps.mix64(i.toLong * 13 + 1)))
+    assert(CuckooSnapshots.stash(overfull).nonEmpty)
+    Seq(low, overfull).foreach { f =>
+      val g = CuckooFilter.deserialize(CuckooSnapshots.legacyBytes(f))
+      assert(sameFilter(f, g))
+      assert(java.util.Arrays.equals(g.serialize(), f.serialize()))
+    }
+    // a negative lead that is neither snapshot magic is rejected
+    val bad = java.nio.ByteBuffer.allocate(32).putInt(-7).array()
+    intercept[IllegalArgumentException](CuckooFilter.deserialize(bad))
   }
 
   test("merge unions membership (repartition merge)") {

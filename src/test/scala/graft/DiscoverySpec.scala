@@ -170,6 +170,38 @@ class DiscoverySpec extends AnyFunSuite {
     assert(full.map(_._1).contains("planted-link.cz"))
   }
 
+  test("discovery resume from legacy-layout filter snapshots matches an uninterrupted run") {
+    // a work dir written before snapshots were sized by occupancy: round 1's
+    // snapshots rewritten into the headerless dense layout. Seed chunks of
+    // 20 make round 2 admit fresh seeds, so it reads those snapshots.
+    val svc = new LinkPlantingService(u)
+    def run(dir: String, legacyAfterRound1: Boolean): Seq[(String, Int, Long)] = {
+      val mk = () => new Engine(spark, u, cfg = contentCfg, workDir = dir,
+        frontierPartitions = 8, seedChunkSize = 20, probeService = svc,
+        discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
+      if (legacyAfterRound1) {
+        mk().run(seedDocs(40), maxRounds = 1)
+        import scala.jdk.CollectionConverters._
+        val walk = Files.walk(java.nio.file.Paths.get(dir, "filters"))
+        val parts = try walk.iterator().asScala
+          .filter(_.getFileName.toString.matches("part\\d+\\.bin")).toVector
+          finally walk.close()
+        assert(parts.nonEmpty, "round 1 wrote no filter snapshots")
+        parts.foreach { f =>
+          val filter = graft.frontier.CuckooFilter.deserialize(Files.readAllBytes(f))
+          Files.write(f, graft.frontier.CuckooSnapshots.legacyBytes(filter))
+        }
+      }
+      mk().run(seedDocs(40))
+      new Engine(spark, u, workDir = dir, frontierPartitions = 8)
+        .resultsTable.read().get.select("domain", "pop_round", "pop_rank")
+        .as[(String, Int, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
+    }
+    val full = run(graft.TmpDirs.create("disc-legacy-full").toString, legacyAfterRound1 = false)
+    val resumed = run(graft.TmpDirs.create("disc-legacy-res").toString, legacyAfterRound1 = true)
+    assert(resumed == full)
+  }
+
   test("crash-mid-round resume: stale uncommitted filter snapshots are dropped, discovered hosts are not lost") {
     // The window: a crash AFTER the discovery pass materializes its
     // filter snapshots (filters/r{N}d) but BEFORE the round's backlog/

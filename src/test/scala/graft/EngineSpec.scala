@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, LogicalPlan, SerializeFromObject}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.functions.element_at
 import org.apache.spark.sql.types.{DataType, ObjectType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,6 +37,11 @@ class EngineSpec extends AnyFunSuite {
     */
   private val SelectJobs = 9
 
+  /** Spark jobs of one resumed `Engine.run` round with discovery on
+    * ("a resumed round runs a pinned number of Spark jobs").
+    */
+  private val RoundJobs = 36
+
   /** Seed corpus: interleaved docs whose text spans carry domains (with
     * planted case/trailing-dot/IDN/duplicate variants via
     * `Universe.seedDomain`) and media spans whose refs must ride through.
@@ -57,6 +63,30 @@ class EngineSpec extends AnyFunSuite {
   private def newEngine(dir: String, chunk: Int = 60) =
     new Engine(spark, u, workDir = dir, frontierPartitions = 8,
       seedChunkSize = chunk)
+
+  /** `body`'s result and the Spark jobs it ran on this thread, counted by
+    * a listener filtered to a job group of its own.
+    */
+  private def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = "count-jobs-" + System.nanoTime()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    val out =
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.ListenerDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    (out, jobs.get)
+  }
 
   private def resultKeys(e: Engine): Seq[(String, Int, Long)] =
     e.resultsTable.read().get
@@ -91,6 +121,24 @@ class EngineSpec extends AnyFunSuite {
     // results carry the full nested document
     val one = results.where($"domain" === domains.head).select("result.DNS_LOCAL.DNSSEC.valid")
     assert(one.count() == 1)
+
+    // each round's deferred counter is the backlog's active rows after
+    // it: backlog and checkpoint commit once per round and compact
+    // together, so version v of each holds the same round's state
+    val ckpt = eng.checkpointTable
+    val backlog = new graft.tables.SnapTable(spark, s"$dir/backlog", Seq("canonical"))
+    assert(backlog.currentVersion == ckpt.currentVersion)
+    val perVersion = (1 to ckpt.currentVersion.get).map { v =>
+      val counters = ckpt.read(Some(v)).get
+        .select(element_at($"fetch_counters", "round"), element_at($"fetch_counters", "deferred"))
+        .as[(Long, Long)].distinct().collect()
+      assert(counters.length == 1, s"checkpoint v$v mixes rounds: ${counters.toSeq}")
+      val active = backlog.read(Some(v)).get.where($"active").count()
+      assert(counters.head._2 == active,
+        s"round ${counters.head._1}: deferred ${counters.head._2}, backlog holds $active active rows")
+      counters.head
+    }
+    assert(perVersion.distinct == stats.map(s => (s.round.toLong, s.deferred)))
   }
 
   test("rounds after the first plan no DomainResult serializer or deserializer") {
@@ -207,28 +255,26 @@ class EngineSpec extends AnyFunSuite {
     val frontier = eng.toFrontier(spark.createDataset(
       (0 until 300).map(i => (u.seedDomain(i.toLong), i.toLong)))).cache()
     frontier.count()
-    val sc = spark.sparkContext
-    val group = "select-jobs-" + System.nanoTime()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "round selection")
-    val sel =
-      try eng.selectRound(frontier)
-      finally {
-        sc.clearJobGroup()
-        org.apache.spark.ListenerDrain(sc)
-        sc.removeSparkListener(listener)
-      }
+    val (sel, jobs) = countJobs(eng.selectRound(frontier))
     try {
       // budgets 12/25 defer part of the frontier
       assert(sel.nSelected > 0 && sel.nSelected < frontier.count())
-      assert(jobs.get == SelectJobs, s"selection ran ${jobs.get} jobs")
+      assert(jobs == SelectJobs, s"selection ran $jobs jobs")
     } finally { sel.release(); frontier.unpersist() }
+  }
+
+  test("a resumed round runs a pinned number of Spark jobs") {
+    val dir = graft.TmpDirs.create("engine-roundjobs").toString
+    val docs = seedDocs(150)
+    def eng = new Engine(spark, u, workDir = dir, frontierPartitions = 8,
+      seedChunkSize = 60, discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
+    assert(eng.run(docs, maxRounds = 1).map(_.round) == Seq(1))
+    val (stats, jobs) = countJobs(eng.run(docs, maxRounds = 2))
+    // the round takes seeds, defers and discovers: every pass runs
+    assert(stats.map(_.round) == Seq(2))
+    assert(stats.head.admitted > 0 && stats.head.deferred > 0 && stats.head.discovered > 0,
+      s"round 2 skipped a pass: ${stats.head}")
+    assert(jobs == RoundJobs, s"round 2 ran $jobs jobs")
   }
 
   test("crawlEntries task count: size hint clamps between one wave and the 8x ceiling") {
