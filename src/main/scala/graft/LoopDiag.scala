@@ -16,10 +16,8 @@ object LoopDiag {
     val cores = args.headOption.getOrElse("8")
     val n = args.lift(1).map(_.toInt).getOrElse(5000)
     val maxRounds = args.lift(2).map(_.toInt).getOrElse(3)
-    val mult = args.lift(3).getOrElse("8")
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .config("graft.probeParts.mult", mult)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")

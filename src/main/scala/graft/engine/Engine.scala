@@ -6,7 +6,7 @@ import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
@@ -18,7 +18,7 @@ import graft.canon.Canon
 import graft.frontier.CuckooFilter
 import graft.model.Model._
 import graft.ops.LinkOps
-import graft.probes.{CrawlConfig, ProbeService, Probes}
+import graft.probes.{CrawlConfig, Probes}
 import graft.spans.SpanCodec
 import graft.tables.SnapTable
 import graft.universe.Universe
@@ -38,11 +38,11 @@ import graft.universe.Universe
   *     ordering-equality criterion),
   *   - salted repartitioning of the probe stage to break hot-provider skew
   *     (reference has no skew handling — its Redis queue hashes by domain;
-  *     here hot buckets are split `saltsForHotBucket` ways and probes of
-  *     one provider spread over executors),
-  *   - dedup-probe-join for shared nameserver IPs (the Redis probe cache
-  *     of `dns_utils.py:235-253` as `dropDuplicates` → probe once → join
-  *     back),
+  *     here hot buckets are split in proportion to their share of the
+  *     round, and probes of one provider spread over executors),
+  *   - a per-partition nameserver-IP probe cache ([[Probes.probeNsIp]],
+  *     the Redis probe cache of `dns_utils.py:235-253`), which hits because
+  *     the probe layout co-locates same-provider domains,
   *   - MERGE-committed results / span / checkpoint tables with
   *     per-partition lineage (partition id, offset watermark, seen-filter
   *     snapshot ref, fetch counters) enabling bit-identical resume.
@@ -58,8 +58,6 @@ object Engine {
   case class StreamResultRow(domain: String, result: DomainResult)
   case class BacklogRow(domain: String, canonical: String, key: Long,
       nsBucket: Int, priority: Int, seq: Long, depth: Int, active: Boolean)
-  case class NsIpRef(domain: String, nsIdx: Int, ns: String,
-      fam: Int, ipIdx: Int, ip: String)
   case class RoundStats(round: Int, admitted: Long, crawled: Long,
       deferred: Long, seconds: Double, discovered: Long = 0L,
       /** Wall seconds per loop phase (seed/admit/filter_refs/select/
@@ -68,7 +66,7 @@ object Engine {
         * rounds are latency-bound on fixed per-round costs at
         * politeness-bounded sizes, so the breakdown is first-class
         * observability, not debug output. `crawl_plan` builds the probe
-        * stage (salt counts, range bounds, the layout shuffle); the probes
+        * stage (range bounds, the layout shuffle); the probes
         * themselves land inside the commit phases (each commit is a
         * separate pass over them).
         */
@@ -182,35 +180,8 @@ object Engine {
   object ResultRows extends WideRows[ResultRow]
   object StreamResultRows extends WideRows[StreamResultRow]
 
-  /** A partition's probe function: one [[Probes]] and one nameserver-IP
-    * probe cache, shared by every entry the function is applied to — the
-    * reference's Redis probe cache (`dns_utils.py:235-253`) per partition.
-    */
-  private[engine] def prober(svc: ProbeService, conf: CrawlConfig,
-      ck: Clock): FrontierEntry => DomainResult = {
-    val p = new Probes(svc, conf)
-    val nsIpCache = scala.collection.mutable.HashMap.empty[String, NsIp]
-    val (hasV4, hasV6) = (p.sourceIpv4.isDefined, p.sourceIpv6.isDefined)
-    e => {
-      p.armDeadline() // per-domain T3 budget, like processDomain
-      val dl = p.getDnsLocal(e.canonical)
-      val ns = p.u.nsFor(e.canonical)
-      val auth =
-        if (ns.isEmpty) None
-        else Some(ns.filter(_.nonEmpty).map { n =>
-          val v4 = if (hasV4) p.u.nsIps4(n).map(ip =>
-            nsIpCache.getOrElseUpdate(ip, p.probeNsIp(ip))) else Seq.empty
-          val v6 = if (hasV6) p.u.nsIps6(n).map(ip =>
-            nsIpCache.getOrElseUpdate(ip, p.probeNsIp(ip))) else Seq.empty
-          NsAuth(n, Option.when(v4.nonEmpty)(v4), Option.when(v6.nonEmpty)(v6))
-        })
-      // stamped per domain, like process_domain (crawl.py:167)
-      DomainResult(e.canonical, ck.now(), dl, auth,
-        p.getMail(e.canonical, dl), p.getWeb(e.canonical, dl),
-        p.getWebPaths(e.canonical, dl), p.u.hstsPreload(e.canonical),
-        Option.when(conf.saveWorkerHostname)(conf.workerHostname))
-    }
-  }
+  /** Column of a bucket's probe salt on the probe stage's input. */
+  private val ProbeSalt = "probe_salt"
 
   private val HostShape = "[a-z0-9](?:[a-z0-9.-]*[a-z0-9])?\\.[a-z]{2,}".r
 
@@ -549,14 +520,25 @@ class Engine(
 
   // ------------------------------------------------------- politeness
 
+  /** Frequency-proportional salt count (SURVEY O11): a nameserver bucket
+    * holding `n` of `total` rows is split into enough cells that none
+    * exceeds ~one reducer's share (`total / shuffle partitions`). A fixed
+    * per-hot-bucket salt constant caps speedup as parallelism grows; this
+    * adapts.
+    */
+  private def saltOf(n: Column, total: Column): Column = {
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    greatest(lit(1L), ceil(n / greatest(lit(1L), floor(total / lit(parts))))).cast("int")
+  }
+
   /** One round's selection: the entries popped this round, each with its
     * global pop rank, and the entries deferred to later rounds.
     */
   private[graft] case class RoundSelection(
       selected: Dataset[FrontierEntry],
-      /** `selected`'s columns plus its global `pop_rank`: the probe
-        * stage's input. The rank rides on the narrow entry rows, so no
-        * pass joins it onto the wide result rows.
+      /** `selected`'s columns plus its global `pop_rank` and its bucket's
+        * probe salt: the probe stage's input. Both ride on the narrow
+        * entry rows, so no pass joins them onto the wide result rows.
         */
       ranked: DataFrame,
       deferred: Dataset[FrontierEntry],
@@ -580,11 +562,12 @@ class Engine(
     * over the per-bucket frontier counts (one row per bucket, budgets
     * evaluated on executors) yields everything the rank needs before it
     * runs: the selected and deferred totals (the loop's drain check and
-    * counter), the largest budget, each bucket's salt, and each bucket's
-    * `pop_rank` offset (the rows all lower buckets contribute). That frame
-    * rides a broadcast join, so `pop_rank` = offset + in-bucket rank needs
-    * no second pass over the selected rows, and no driver structure grows
-    * with the bucket count.
+    * counter), the largest budget, each bucket's rank salt and probe salt
+    * ([[saltOf]] over its frontier and its selected count), and each
+    * bucket's `pop_rank` offset (the rows all lower buckets contribute).
+    * That frame rides a broadcast join, so `pop_rank` = offset + in-bucket
+    * rank needs no second pass over the selected rows, and no driver
+    * structure grows with the bucket count.
     *
     * Two-phase rank so a hot bucket never sorts its whole frontier on one
     * reducer: phase 1 ranks within (bucket, salt) cells — an entry past the
@@ -596,11 +579,8 @@ class Engine(
     */
   private[graft] def selectRound(frontier: Dataset[FrontierEntry]): RoundSelection = {
     val u = universe
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
     val byBucket = Window.orderBy(col("mb"))
     val all = byBucket.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // frequency-proportional salts, the formula of `saltCounts`
-    val target = greatest(lit(1L), floor(sum(col("count")).over(all) / lit(parts)))
     val buckets = frontier.groupBy(col("nsBucket")).count().as[(Int, Long)]
       .map { case (b, c) =>
         val budget = u.policyBudget(b)
@@ -608,7 +588,8 @@ class Engine(
       }
       .toDF("mb", "count", "budget", "take")
       .select(col("mb"), col("budget"),
-        greatest(lit(1L), ceil(col("count") / target)).cast("int").as("salt"),
+        saltOf(col("count"), sum(col("count")).over(all)).as("salt"),
+        saltOf(col("take"), sum(col("take")).over(all)).as(ProbeSalt),
         coalesce(sum(col("take")).over(
           byBucket.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("offset"),
         max(col("budget")).over(all).as("maxBudget"),
@@ -624,7 +605,7 @@ class Engine(
       .orderBy(rankOrder: _*)
     val w2 = Window.partitionBy(col("nsBucket")).orderBy(rankOrder: _*)
     val ranked = frontier
-      .join(broadcast(buckets.select("mb", "budget", "salt", "offset")),
+      .join(broadcast(buckets.select("mb", "budget", "salt", "offset", ProbeSalt)),
         col("nsBucket") === col("mb"))
       .withColumn("_r1", row_number().over(w1))
       .where(col("_r1") <= lit(maxBudget) && col("_r1") <= col("budget"))
@@ -633,7 +614,7 @@ class Engine(
       .withColumn("pop_rank", col("offset") + col("_rank"))
       .drop("mb", "budget", "salt", "offset", "_r1", "_rank")
       .cache()
-    val selected = ranked.drop("pop_rank").as[FrontierEntry]
+    val selected = ranked.drop("pop_rank", ProbeSalt).as[FrontierEntry]
     val deferred = frontier
       .join(ranked.select(col("canonical").as("_selc")),
         col("canonical") === col("_selc"), "left_anti")
@@ -651,152 +632,58 @@ class Engine(
 
   // ------------------------------------------------------------ crawl
 
-  /** Frequency-proportional salt counts (SURVEY O11: salt count ∝ observed
-    * key frequency): each nameserver bucket is split into enough salt
-    * cells that no cell exceeds ~one reducer's share. A fixed per-hot-
-    * bucket salt constant caps speedup as parallelism grows; this adapts.
+  /** Crawl one admitted set: each entry's [[Probes.processDomain]]
+    * document, stamped by the engine's clock.
     *
-    * With a known total (`totalHint` — the frontier loop always passes
-    * its politeness-bounded selected count), only buckets ABOVE the
-    * per-reducer target are collected: at most `total / target` = one
-    * per shuffle partition can exceed it, so the driver map is bounded
-    * by the core count regardless of bucket cardinality — every other
-    * bucket's salt is the implicit 1 the lookups default to. Without a
-    * hint (ad-hoc `crawlDomains` / bench callers) the full map collects,
-    * as before.
-    */
-  private def saltCounts(entries: Dataset[_],
-      totalHint: Option[Long] = None): Map[Int, Int] = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    totalHint match {
-      case Some(total) =>
-        val target = math.max(1L, total.max(1L) / parts)
-        entries.groupBy(col("nsBucket")).count()
-          .where(col("count") > target) // ≤ parts survivors by pigeonhole
-          .as[(Int, Long)].collect()
-          .map { case (b, c) => b -> math.ceil(c.toDouble / target).toInt }
-          .toMap
-      case None =>
-        val counts = entries.groupBy(col("nsBucket")).count()
-          .as[(Int, Long)].collect().toMap
-        val total = counts.values.sum.max(1L)
-        val target = math.max(1L, total / parts)
-        counts.map { case (b, c) =>
-          b -> math.max(1, math.ceil(c.toDouble / target).toInt)
-        }
-    }
-  }
-
-  /** Crawl one admitted set.
-    *
-    * Partitioning: range-partitioned on `(nsBucket, salt, key)` with
-    * frequency-proportional salting — same-provider domains co-locate (the
-    * per-partition probe cache then hits like the reference's Redis cache,
-    * `dns_utils.py:235-253`), hot providers are split across reducers, and
-    * range partitioning avoids hash-collision imbalance at high core
-    * counts.
-    *
-    * NS-IP probe dedup runs two ways with identical results:
-    * per-partition cache (default — zero extra shuffles; duplicate probes
-    * only across salt splits, bounded by salt count) or a global
-    * `dropDuplicates → probe → join` (`dedupAcrossPartitions = true`,
-    * exact-once probes at the cost of 3 shuffles — the right trade when
-    * probes are expensive network calls rather than compute).
+    * Partitioning: [[probeLayout]], with each bucket's salt from its share
+    * of `entries` ([[saltOf]], the formula the round loop applies to
+    * its selected counts). `sizeHint` only sizes the task count.
     */
   def crawlEntries(entries: Dataset[FrontierEntry],
-      dedupAcrossPartitions: Boolean = false,
       sizeHint: Option[Long] = None): Dataset[DomainResult] = {
-    val u = svc // probe leaves go through the pluggable service
-    val conf = cfg
-    val ck = clock
+    val (u, conf, ck) = (svc, cfg, clock)
     // cache only if the caller hasn't (re-caching would log "already
-    // cached" and double-register storage)
+    // cached" and double-register storage): the bucket counts and the
+    // probes both read it
     val needCache = entries.storageLevel == StorageLevel.NONE
     val input = if (needCache) entries.cache() else entries
-    val salted = probeLayout(input.toDF(), sizeHint).as[FrontierEntry]
-
-    val result = if (!dedupAcrossPartitions) {
-      // single narrow pass: per-partition NS-probe cache + full assembly
-      salted.mapPartitions(it => it.map(Engine.prober(u, conf, ck)))
-    } else {
-      // --- dedup-probe-join for nameserver IPs (cross-domain cache, J4/D3)
-      // source-address gates are deterministic (same on driver/executor)
-      val gateProbe = new Probes(u, conf)
-      val (hasV4, hasV6) = (gateProbe.sourceIpv4.isDefined, gateProbe.sourceIpv6.isDefined)
-      val nsRefs = salted.flatMap { e =>
-        u.nsFor(e.canonical).zipWithIndex.flatMap { case (ns, i) =>
-          val refs =
-            (if (hasV4) u.nsIps4(ns).zipWithIndex.map { case (ip, j) => NsIpRef(e.canonical, i, ns, 4, j, ip) } else Seq.empty) ++
-              (if (hasV6) u.nsIps6(ns).zipWithIndex.map { case (ip, j) => NsIpRef(e.canonical, i, ns, 6, j, ip) } else Seq.empty)
-          // sentinel for IP-less nameservers so both probe paths agree:
-          // the NS still appears in DNS_AUTH with empty address lists
-          if (refs.isEmpty) Seq(NsIpRef(e.canonical, i, ns, 0, 0, "")) else refs
-        }
-      }
-      val probedIps = nsRefs.where(col("fam") =!= 0).select("ip").distinct().as[String]
-        .mapPartitions { ips =>
-          val p = new Probes(u, conf)
-          ips.map(ip => (ip, p.probeNsIp(ip)))
-        }.toDF("p_ip", "info")
-      val auth = nsRefs.toDF()
-        .join(probedIps, col("ip") === col("p_ip"), "left_outer")
-        .select(col("domain"), col("nsIdx"), col("ns"), col("fam"), col("ipIdx"), col("info"))
-        .as[(String, Int, String, Int, Int, Option[NsIp])]
-        .groupByKey(_._1)
-        .mapGroups { (domain, it) =>
-          val rows = it.toVector.sortBy(r => (r._2, r._4, r._5))
-          val nsAuth = rows.groupBy(r => (r._2, r._3)).toVector.sortBy(_._1._1).map {
-            case ((_, ns), rs) =>
-              val v4 = rs.filter(_._4 == 4).sortBy(_._5).flatMap(_._6)
-              val v6 = rs.filter(_._4 == 6).sortBy(_._5).flatMap(_._6)
-              NsAuth(ns, Option.when(v4.nonEmpty)(v4), Option.when(v6.nonEmpty)(v6))
-          }
-          (domain, nsAuth)
-        }.toDF("a_domain", "auth")
-
-      val base = salted.mapPartitions { it =>
+    // one row per bucket, collected: the salts then plan as a local
+    // relation, with no window stage or broadcast job of their own
+    val counts = input.groupBy(col("nsBucket")).count().as[(Int, Long)].collect().toSeq
+    val salts = counts.toDF("mb", "count")
+      .select(col("mb"), saltOf(col("count"), lit(counts.map(_._2).sum)).as(ProbeSalt))
+    val result = probeLayout(input.join(broadcast(salts), col("nsBucket") === col("mb"))
+        .drop("mb"), sizeHint)
+      .as[FrontierEntry]
+      .mapPartitions { it =>
         val p = new Probes(u, conf)
-        it.map { e =>
-          val dl = p.getDnsLocal(e.canonical)
-          val r = DomainResult(e.canonical, ck.now(), dl, None,
-            p.getMail(e.canonical, dl), p.getWeb(e.canonical, dl),
-            p.getWebPaths(e.canonical, dl), p.u.hstsPreload(e.canonical),
-            Option.when(conf.saveWorkerHostname)(conf.workerHostname))
-          (e.canonical, r)
-        }
-      }.toDF("b_domain", "result")
-
-      base.join(auth, col("b_domain") === col("a_domain"), "left_outer")
-        .select(col("result"), col("auth"))
-        .as[(DomainResult, Option[Seq[NsAuth]])]
-        .map { case (r, a) => r.copy(DNS_AUTH = a.filter(_.nonEmpty)) }
-    }
+        it.map(e => p.processDomain(e.canonical, ck.now()))
+      }
     // release input's storage once the crawl plan itself has run (the
-    // saltCounts collect above must not trigger it — hence the result
-    // plan, not input, is the listener trigger)
+    // result plan, not input, is the listener trigger)
     if (needCache) graft.ops.DedupOps.unpersistAfter(result, input)
     result
   }
 
   /** The probe stage's input layout: range-partitioned on `(nsBucket,
-    * salt, key)` with frequency-proportional salting (see [[crawlEntries]]),
-    * over any frame that carries the [[FrontierEntry]] columns.
+    * salt, key)`, over any frame that carries the [[FrontierEntry]] columns
+    * and a `probe_salt` column. Same-provider domains co-locate,
+    * so each partition's [[Probes]] NS-IP cache hits like the reference's
+    * Redis cache (`dns_utils.py:235-253`); hot providers are split across
+    * reducers (duplicate NS-IP probes only across salt splits, bounded by
+    * the salt count); range partitioning avoids hash-collision imbalance
+    * at high core counts.
     */
   private def probeLayout(input: DataFrame, sizeHint: Option[Long]): DataFrame = {
-    val salts = saltCounts(input, sizeHint) // hinted: driver map ≤ cores
-    val saltOf = udf((b: Int) => salts.getOrElse(b, 1))
     // Explicit partition count: the probe stage is compute-bound on tiny
     // rows, so AQE's byte-based coalescing would collapse it onto a few
     // cores (40 MB of FrontierEntry rows ≈ hours of probe CPU at real
     // scale). 8× cores measured best at both 8 and 32 cores (500k-domain
     // legs: ×4 → 6.4/5.2 s, ×8 → 6.1/3.8 s, ×16 → 7.6/3.5 s at 8/32
     // cores) — probe cost varies per domain (NS fan-out, redirect
-    // chains), so finer tasks amortize the last wave's stragglers;
-    // tunable via graft.probeParts.mult, and user partition counts are
-    // preserved by AQE.
-    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val maxParts = shuffleParts *
-      spark.conf.getOption("graft.probeParts.mult").map(_.toInt).getOrElse(8)
+    // chains), so finer tasks amortize the last wave's stragglers; user
+    // partition counts are preserved by AQE.
+    val tasksPerCore = 8
     // With a known input size (the frontier loop passes its politeness-
     // bounded selected count), clamp task count so small rounds don't pay
     // maxParts × per-task fixed costs (service init, one parquet writer
@@ -807,26 +694,26 @@ class Engine(
     // files for the wide result schema; smaller files pay
     // disproportionate per-file costs (a 1628-leaf-column footer with
     // per-column stats is ~hundreds of KB regardless of row count)
-    val targetRows =
-      spark.conf.getOption("graft.probeParts.targetRows").map(_.toLong).getOrElse(2000L)
+    val rowsPerTask = 2000L
+    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val maxParts = shuffleParts * tasksPerCore
     val probeParts = sizeHint match {
       case Some(n) =>
         math.max(shuffleParts.toLong, math.min(maxParts.toLong,
-          n / targetRows + 1L)).toInt
+          n / rowsPerTask + 1L)).toInt
       case None => maxParts
     }
     input
-      .withColumn("_salt", pmod(col("key"), saltOf(col("nsBucket"))))
+      .withColumn("_salt", pmod(col("key"), col(ProbeSalt)))
       .repartitionByRange(probeParts, col("nsBucket"), col("_salt"), col("key"))
-      .drop("_salt")
+      .drop("_salt", ProbeSalt)
   }
 
   /** One round's probe output: each selected entry with its pop rank and
-    * result document, produced by the same per-partition probe function
-    * as [[crawlEntries]] over the same layout. An RDD, so the passes that
-    * consume it plan no [[DomainResult]] serializer; with AQE on, building
-    * it runs the layout's shuffle once, and every pass reads that shuffle
-    * output.
+    * result document, produced by the same per-partition [[Probes]] and
+    * layout as [[crawlEntries]]. An RDD, so the passes that consume it
+    * plan no [[DomainResult]] serializer; with AQE on, building it runs
+    * the layout's shuffle once, and every pass reads that shuffle output.
     */
   private def probeRanked(ranked: DataFrame, nSelected: Long)
       : RDD[(FrontierEntry, Long, DomainResult)] = {
@@ -836,8 +723,8 @@ class Engine(
       .select(entry.as("_1"), col("pop_rank").as("_2"))
       .as[(FrontierEntry, Long)].rdd
       .mapPartitions { it =>
-        val probe = Engine.prober(u, conf, ck)
-        it.map { case (e, rank) => (e, rank, probe(e)) }
+        val p = new Probes(u, conf)
+        it.map { case (e, rank) => (e, rank, p.processDomain(e.canonical, ck.now())) }
       }
   }
 

@@ -433,7 +433,7 @@ object RelationalOps {
     * ×`salts` in the shuffle, hot-key reduce work ÷`salts`. Worth it iff
     * the dim is too big to broadcast and a key's fact share exceeds a
     * task's capacity. The engine's own frontier uses the same idea with
-    * frequency-proportional salts (`Engine.saltCounts`); this is the
+    * frequency-proportional salts (`Engine.saltOf`); this is the
     * reusable two-table form.
     */
   def saltedJoin(

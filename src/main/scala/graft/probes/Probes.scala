@@ -34,12 +34,6 @@ class Probes(
   /** The leaf service all probe code calls — deadline-guarded when T3 is on. */
   val u: ProbeService = deadline.getOrElse(rawService)
 
-  /** Re-arm the per-domain T3 budget. [[processDomain]] does this itself;
-    * callers that inline the per-domain assembly (the engine's crawl
-    * stage) call it once per domain instead.
-    */
-  def armDeadline(): Unit = deadline.foreach(_.startJob())
-
   /** Source-address probe (S8, reference `ip_utils.py:44-75` +
     * `get_source_addresses`): resolved once per Probes (≈ per worker, like
     * the reference's Redis-cached `sourceips-<hostname>`); None gates the
@@ -250,16 +244,29 @@ class Probes(
       DNSSEC = checkDnssec(domain))
   }
 
-  /** Per-nameserver-IP probe (reference `dns_utils.py:235-253` — the
-    * Redis-cached leaf; the engine dedups these across domains).
-    */
   private def geoIfGlobal(ip: String): Option[GeoIp] =
     if (graft.canon.IpPredicates.isGlobalIp(ip)) Some(u.geo(ip)) else None
 
-  def probeNsIp(ip: String): NsIp =
-    NsIp(ip, geoIfGlobal(ip),
-      chaos = cfg.authChaosTxt.map(rec =>
-        ChaosEntry(rec.replace(".", ""), u.chaosTxt(ip, rec))))
+  // per-Probes (≈ per-partition) NS-IP probe cache: the reference's
+  // Redis-cached leaf (dns_utils.py:235-253). Same-provider domains share
+  // nameserver IPs, and the engine's probe layout co-locates them.
+  @transient private lazy val nsIpCache = scala.collection.mutable.HashMap.empty[String, NsIp]
+
+  /** Per-nameserver-IP probe (reference `dns_utils.py:235-253`), memoized
+    * per Probes instance. A probe that returned a timeout (a tripped T3
+    * deadline, a hard-mode leaf cut, a saturated leaf pool) is not cached:
+    * it belongs to the domain whose budget ran out, and a later domain
+    * probes the IP again inside its own budget.
+    */
+  def probeNsIp(ip: String): NsIp = nsIpCache.get(ip) match {
+    case Some(hit) => hit
+    case None =>
+      val r = NsIp(ip, geoIfGlobal(ip),
+        chaos = cfg.authChaosTxt.map(rec =>
+          ChaosEntry(rec.replace(".", ""), u.chaosTxt(ip, rec))))
+      if (!r.chaos.exists(_.txt.error.contains("timeout"))) nsIpCache(ip) = r
+      r
+  }
 
   /** DNS_AUTH (reference `crawl.py:72-106`): NS fan-out → per-NS A/AAAA →
     * per-IP probes; no NS → None; empty-value NS skipped; each address

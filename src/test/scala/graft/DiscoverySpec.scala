@@ -153,33 +153,16 @@ class DiscoverySpec extends AnyFunSuite {
   }
 
   test("discovery resume: stop after round 1, resume in a new engine — bit-identical to an uninterrupted run") {
+    // Seed chunks of 20 make round 2 admit fresh seeds, so the resumed run
+    // reads round 1's committed filter snapshots: as written, and rewritten
+    // into the headerless dense layout of work dirs written before
+    // snapshots were sized by occupancy.
     val svc = new LinkPlantingService(u)
-    def run(dir: String, interrupted: Boolean): Seq[(String, Int, Long)] = {
-      val mk = () => new Engine(spark, u, cfg = contentCfg, workDir = dir,
-        frontierPartitions = 8, probeService = svc,
-        discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
-      if (interrupted) { mk().run(seedDocs(40), maxRounds = 1); () }
-      mk().run(seedDocs(40))
-      new Engine(spark, u, workDir = dir, frontierPartitions = 8)
-        .resultsTable.read().get.select("domain", "pop_round", "pop_rank")
-        .as[(String, Int, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
-    }
-    val full = run(graft.TmpDirs.create("disc-full").toString, interrupted = false)
-    val resumed = run(graft.TmpDirs.create("disc-res").toString, interrupted = true)
-    assert(resumed == full)
-    assert(full.map(_._1).contains("planted-link.cz"))
-  }
-
-  test("discovery resume from legacy-layout filter snapshots matches an uninterrupted run") {
-    // a work dir written before snapshots were sized by occupancy: round 1's
-    // snapshots rewritten into the headerless dense layout. Seed chunks of
-    // 20 make round 2 admit fresh seeds, so it reads those snapshots.
-    val svc = new LinkPlantingService(u)
-    def run(dir: String, legacyAfterRound1: Boolean): Seq[(String, Int, Long)] = {
+    def run(dir: String, resumeLayout: Option[String]): Seq[(String, Int, Long)] = {
       val mk = () => new Engine(spark, u, cfg = contentCfg, workDir = dir,
         frontierPartitions = 8, seedChunkSize = 20, probeService = svc,
         discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
-      if (legacyAfterRound1) {
+      resumeLayout.foreach { layout =>
         mk().run(seedDocs(40), maxRounds = 1)
         import scala.jdk.CollectionConverters._
         val walk = Files.walk(java.nio.file.Paths.get(dir, "filters"))
@@ -187,7 +170,7 @@ class DiscoverySpec extends AnyFunSuite {
           .filter(_.getFileName.toString.matches("part\\d+\\.bin")).toVector
           finally walk.close()
         assert(parts.nonEmpty, "round 1 wrote no filter snapshots")
-        parts.foreach { f =>
+        if (layout == "legacy") parts.foreach { f =>
           val filter = graft.frontier.CuckooFilter.deserialize(Files.readAllBytes(f))
           Files.write(f, graft.frontier.CuckooSnapshots.legacyBytes(filter))
         }
@@ -197,9 +180,12 @@ class DiscoverySpec extends AnyFunSuite {
         .resultsTable.read().get.select("domain", "pop_round", "pop_rank")
         .as[(String, Int, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
     }
-    val full = run(graft.TmpDirs.create("disc-legacy-full").toString, legacyAfterRound1 = false)
-    val resumed = run(graft.TmpDirs.create("disc-legacy-res").toString, legacyAfterRound1 = true)
-    assert(resumed == full)
+    val full = run(graft.TmpDirs.create("disc-full").toString, None)
+    assert(full.map(_._1).contains("planted-link.cz"))
+    Seq("current", "legacy").foreach { layout =>
+      val resumed = run(graft.TmpDirs.create(s"disc-res-$layout").toString, Some(layout))
+      assert(resumed == full, s"resume from $layout-layout snapshots diverged")
+    }
   }
 
   test("crash-mid-round resume: stale uncommitted filter snapshots are dropped, discovered hosts are not lost") {

@@ -40,7 +40,7 @@ class EngineSpec extends AnyFunSuite {
   /** Spark jobs of one resumed `Engine.run` round with discovery on
     * ("a resumed round runs a pinned number of Spark jobs").
     */
-  private val RoundJobs = 36
+  private val RoundJobs = 35
 
   /** Seed corpus: interleaved docs whose text spans carry domains (with
     * planted case/trailing-dot/IDN/duplicate variants via
@@ -326,18 +326,24 @@ class EngineSpec extends AnyFunSuite {
     assert(out.sorted.toSeq == Seq("alpha.cz", "beta.cz", "delta.cz", "gamma.cz"))
   }
 
-  test("per-partition probe cache and global dedup-probe-join agree") {
-    val eng = newEngine(graft.TmpDirs.create("engine-dedup").toString)
+  test("crawlEntries equals a fresh Probes.processDomain per domain") {
+    val eng = newEngine(graft.TmpDirs.create("engine-probes").toString)
     val seeds = spark.createDataset((0L until 80L).map(u.seedDomain))
     val entries = eng.toFrontier(
       seeds.toDF("domain").withColumn("seq",
         org.apache.spark.sql.functions.monotonically_increasing_id())
         .as[(String, Long)])
-    val fast = eng.crawlEntries(entries, dedupAcrossPartitions = false)
-      .collect().sortBy(_.domain)
-    val exact = eng.crawlEntries(entries, dedupAcrossPartitions = true)
-      .collect().sortBy(_.domain)
-    assert(fast.toSeq == exact.toSeq)
+    val crawled = eng.crawlEntries(entries).collect().sortBy(_.domain).toSeq
+    // domains share nameserver IPs, so a partition's NS-IP cache is hit
+    val domainsPerNsIp = crawled
+      .flatMap(r => r.DNS_AUTH.toSeq.flatten
+        .flatMap(a => a.ipv4.toSeq.flatten ++ a.ipv6.toSeq.flatten)
+        .map(_.ip -> r.domain))
+      .distinct.groupBy(_._1).values.map(_.size)
+    assert(domainsPerNsIp.exists(_ >= 2), "no NS IP is shared by two domains")
+    val fresh = crawled.map(r => new graft.probes.Probes(u, graft.probes.CrawlConfig())
+      .processDomain(r.domain, Engine.Clock.fixedStamp))
+    assert(crawled == fresh)
   }
 
   test("media spans in the input corpus are preserved verbatim on read-back") {

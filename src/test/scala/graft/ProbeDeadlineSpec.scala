@@ -80,6 +80,37 @@ class ProbeDeadlineSpec extends AnyFunSuite {
     assert(r2.DNS_LOCAL.TXT.isDefined)
   }
 
+  test("cooperative: a timeout of a domain whose budget ran out is not " +
+      "served from the NS-IP cache to a later domain") {
+    // two domains on the same nameservers, which have an IPv4 address
+    def nsIps(auth: Option[Seq[NsAuth]]): Seq[NsIp] =
+      auth.toSeq.flatten.flatMap(a => a.ipv4.toSeq.flatten ++ a.ipv6.toSeq.flatten)
+    val (a, b) = (0L until 500L).map(i => graft.canon.Canon.canonicalize(u.seedDomain(i)))
+      .distinct.filter(d => u.nsFor(d).flatMap(u.nsIps4).nonEmpty)
+      .groupBy(d => u.nsFor(d).sorted).values.find(_.size >= 2)
+      .map(ds => (ds(0), ds(1))).getOrElse(fail("no two domains share nameservers"))
+    val clock = new FakeClock()
+    // while domain A is probed, every CHAOS query "takes" the whole 80 s
+    // budget: A's first NS IP answers its first record in budget and
+    // times out on the second
+    var slowChaos = true
+    val svc = new ForwardingProbeService(u) {
+      override def chaosTxt(ip: String, qname: String): ChaosTxt = {
+        if (slowChaos) clock.advanceSeconds(80)
+        inner.chaosTxt(ip, qname)
+      }
+    }
+    val p = new Probes(svc, CrawlConfig(), clock)
+    val timedOut = nsIps(p.processDomain(a, "t").DNS_AUTH)
+      .filter(_.chaos.exists(_.txt.error.contains("timeout"))).map(_.ip)
+    assert(timedOut.nonEmpty, s"$a never tripped its budget on an NS IP")
+    slowChaos = false
+    val rb = p.processDomain(b, "t")
+    assert(nsIps(rb.DNS_AUTH).map(_.ip).exists(timedOut.contains),
+      s"$b shares no timed-out NS IP with $a")
+    assert(rb == new Probes(svc, CrawlConfig(), clock).processDomain(b, "t"))
+  }
+
   test("hard mode: a leaf that hangs past the budget is interrupted and the " +
       "web step carries the reference timeout error, within wall budget") {
     val hang = new ForwardingProbeService(u) {
