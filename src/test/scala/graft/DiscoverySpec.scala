@@ -152,40 +152,45 @@ class DiscoverySpec extends AnyFunSuite {
       s"depth 2 should discover beyond depth 1 (${domains.size} vs ${domains2.size})")
   }
 
-  test("discovery resume: stop after round 1, resume in a new engine — bit-identical to an uninterrupted run") {
-    // Seed chunks of 20 make round 2 admit fresh seeds, so the resumed run
-    // reads round 1's committed filter snapshots: as written, and rewritten
-    // into the headerless dense layout of work dirs written before
-    // snapshots were sized by occupancy.
+  // Seed chunks of 20 make round 2 admit fresh seeds, so a run resumed after
+  // round 1 reads round 1's committed filter snapshots: as written
+  // ("current"), or rewritten into the headerless dense layout of work dirs
+  // written before snapshots were sized by occupancy ("legacy").
+  private def resumeRun(dir: String, resumeLayout: Option[String]): Seq[(String, Int, Long)] = {
     val svc = new LinkPlantingService(u)
-    def run(dir: String, resumeLayout: Option[String]): Seq[(String, Int, Long)] = {
-      val mk = () => new Engine(spark, u, cfg = contentCfg, workDir = dir,
-        frontierPartitions = 8, seedChunkSize = 20, probeService = svc,
-        discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
-      resumeLayout.foreach { layout =>
-        mk().run(seedDocs(40), maxRounds = 1)
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(java.nio.file.Paths.get(dir, "filters"))
-        val parts = try walk.iterator().asScala
-          .filter(_.getFileName.toString.matches("part\\d+\\.bin")).toVector
-          finally walk.close()
-        assert(parts.nonEmpty, "round 1 wrote no filter snapshots")
-        if (layout == "legacy") parts.foreach { f =>
-          val filter = graft.frontier.CuckooFilter.deserialize(Files.readAllBytes(f))
-          Files.write(f, graft.frontier.CuckooSnapshots.legacyBytes(filter))
-        }
+    val mk = () => new Engine(spark, u, cfg = contentCfg, workDir = dir,
+      frontierPartitions = 8, seedChunkSize = 20, probeService = svc,
+      discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
+    resumeLayout.foreach { layout =>
+      mk().run(seedDocs(40), maxRounds = 1)
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(dir, "filters"))
+      val parts = try walk.iterator().asScala
+        .filter(_.getFileName.toString.matches("part\\d+\\.bin")).toVector
+        finally walk.close()
+      assert(parts.nonEmpty, "round 1 wrote no filter snapshots")
+      if (layout == "legacy") parts.foreach { f =>
+        val filter = graft.frontier.CuckooFilter.deserialize(Files.readAllBytes(f))
+        Files.write(f, graft.frontier.CuckooSnapshots.legacyBytes(filter))
       }
-      mk().run(seedDocs(40))
-      new Engine(spark, u, workDir = dir, frontierPartitions = 8)
-        .resultsTable.read().get.select("domain", "pop_round", "pop_rank")
-        .as[(String, Int, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
     }
-    val full = run(graft.TmpDirs.create("disc-full").toString, None)
-    assert(full.map(_._1).contains("planted-link.cz"))
-    Seq("current", "legacy").foreach { layout =>
-      val resumed = run(graft.TmpDirs.create(s"disc-res-$layout").toString, Some(layout))
-      assert(resumed == full, s"resume from $layout-layout snapshots diverged")
-    }
+    mk().run(seedDocs(40))
+    new Engine(spark, u, workDir = dir, frontierPartitions = 8)
+      .resultsTable.read().get.select("domain", "pop_round", "pop_rank")
+      .as[(String, Int, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
+  }
+
+  private lazy val uninterrupted = resumeRun(graft.TmpDirs.create("disc-full").toString, None)
+
+  test("discovery resume: stop after round 1, resume in a new engine — bit-identical to an uninterrupted run") {
+    assert(uninterrupted.map(_._1).contains("planted-link.cz"))
+    val resumed = resumeRun(graft.TmpDirs.create("disc-res").toString, Some("current"))
+    assert(resumed == uninterrupted)
+  }
+
+  test("discovery resume from legacy-layout filter snapshots matches an uninterrupted run") {
+    val resumed = resumeRun(graft.TmpDirs.create("disc-legacy-res").toString, Some("legacy"))
+    assert(resumed == uninterrupted)
   }
 
   test("crash-mid-round resume: stale uncommitted filter snapshots are dropped, discovered hosts are not lost") {
