@@ -43,9 +43,11 @@ import graft.universe.Universe
   *   - a per-partition nameserver-IP probe cache ([[Probes.probeNsIp]],
   *     the Redis probe cache of `dns_utils.py:235-253`), which hits because
   *     the probe layout co-locates same-provider domains,
-  *   - MERGE-committed results / span / checkpoint tables with
+  *   - MERGE-committed results / backlog / checkpoint tables with
   *     per-partition lineage (partition id, offset watermark, seen-filter
-  *     snapshot ref, fetch counters) enabling bit-identical resume.
+  *     snapshot ref, fetch counters) enabling bit-identical resume; the
+  *     span table is a read-time view of the results table
+  *     ([[SpanCodec.view]]), not a stored copy.
   *
   * Where the reference runs Redis/RQ + forked workers
   * (`controller.py` / `workers.py`), this engine is one declarative plan
@@ -61,14 +63,13 @@ object Engine {
   case class RoundStats(round: Int, admitted: Long, crawled: Long,
       deferred: Long, seconds: Double, discovered: Long = 0L,
       /** Wall seconds per loop phase (seed/admit/filter_refs/select/
-        * crawl_plan/commit_results/commit_spans/discover/
-        * commit_backlog/commit_ckpt/compact) — frontier
-        * rounds are latency-bound on fixed per-round costs at
-        * politeness-bounded sizes, so the breakdown is first-class
-        * observability, not debug output. `crawl_plan` builds the probe
-        * stage (range bounds, the layout shuffle); the probes
-        * themselves land inside the commit phases (each commit is a
-        * separate pass over them).
+        * crawl_plan/commit_results/discover/commit_backlog/commit_ckpt/
+        * compact) — frontier rounds are latency-bound on fixed per-round
+        * costs at politeness-bounded sizes, so the breakdown is
+        * first-class observability, not debug output. `crawl_plan` builds
+        * the probe stage (range bounds, the layout shuffle); the probes
+        * themselves land inside `commit_results` and `discover` (each is
+        * a separate pass over them).
         */
       phases: Map[String, Double] = Map.empty)
 
@@ -108,9 +109,10 @@ object Engine {
     * scoreboard — needs a fixed stamp, so [[Clock.fixed]] is the default
     * and wall time is opt-in (library: `clock = Engine.Clock.utcWall`;
     * CLI: `--real-timestamps`). A non-deterministic clock, exactly like a
-    * non-deterministic [[graft.probes.ProbeService]], disables the
-    * multi-pass probe consumption: each round's results persist once so
-    * every commit pass carries identical stamps.
+    * non-deterministic [[graft.probes.ProbeService]], stops a round from
+    * re-probing for its second pass: with discovery on, the round's probe
+    * output persists once, so the results and discovery passes read the
+    * same documents.
     */
   trait Clock extends Serializable {
     /** Same contract as `ProbeService.deterministic`: `true` promises
@@ -179,6 +181,45 @@ object Engine {
   }
   object ResultRows extends WideRows[ResultRow]
   object StreamResultRows extends WideRows[StreamResultRow]
+
+  /** Interleaved-docs → candidate domains with a stable global seq derived
+    * from (doc key, span offset) — no global zipWithIndex, so the seq is
+    * identical at any parallelism. Doc key: the doc_id's digit run when it
+    * has one of sane width (input corpora carry their index digits, and
+    * FIFO order = doc order); otherwise a hash key in a disjoint upper
+    * range (deterministic, ANSI-safe — no cast of "" or 100-digit runs).
+    * Offsets clamp at 2^22-1; residual seq ties are broken downstream by
+    * the canonical domain, so ordering stays total.
+    *
+    * Range discipline: digit docKeys < 10^12, hash docKeys ∈ [10^12, 2^40),
+    * so EVERY seed seq < 2^40·2^22 = 2^62 — strictly below the discovery
+    * seq base ([[discoverySeq]] uses [2^62, 2^62+2^40)), which
+    * keeps "discovered hosts order after same-priority seeds" true for
+    * hash-keyed corpora too, not just digit-keyed ones. The batch loop and
+    * the streaming crawl ([[graft.streaming.StreamingCrawl.seedEntries]])
+    * both take their seeds from here.
+    */
+  def extractSeeds(docs: Dataset[Doc]): Dataset[(String, Long)] = {
+    import docs.sparkSession.implicits._
+    val digits = regexp_extract(col("doc_id"), "(\\d+)", 1)
+    val docKey = when(length(digits).between(1, 12), digits.cast("long"))
+      .otherwise(pmod(xxhash64(col("doc_id")), lit((1L << 40) - 1000000000000L))
+        + lit(1000000000000L))
+    docs.select(col("doc_id"), explode(col("spans")).as("s"))
+      .where(col("s.kind") === "text")
+      .select(col("s.text").as("domain"),
+        (docKey * lit(1L << 22) + least(col("s.offset"), lit((1L << 22) - 1))).as("seq"))
+      .where(col("domain").rlike("^[\\p{L}0-9.-]+\\.[\\p{L}]{2,}\\.?\\s*$"))
+      .as[(String, Long)]
+  }
+
+  /** Seq of a discovered host: in [2^62, 2^62+2^40), from the canonical
+    * host's hash — disjoint from every seed seq ([[extractSeeds]]), so
+    * discovered hosts order after same-priority seeds, and deterministic
+    * at any parallelism. The batch loop and the discovering stream share it.
+    */
+  def discoverySeq(canonical: Column): Column =
+    lit(1L << 62) + pmod(xxhash64(lit("disc"), canonical), lit(1L << 40))
 
   /** Column of a bucket's probe salt on the probe stage's input. */
   private val ProbeSalt = "probe_salt"
@@ -280,39 +321,10 @@ class Engine(
 
 
   private val resultsT = new SnapTable(spark, s"$workDir/results", Seq("domain"))
-  private val spansT = new SnapTable(spark, s"$workDir/result_spans", Seq("doc_id"))
   private val checkpointT = new SnapTable(spark, s"$workDir/checkpoint", Seq("partition_id"))
   private val backlogT = new SnapTable(spark, s"$workDir/backlog", Seq("canonical"))
 
   // ------------------------------------------------------------ seeds
-
-  /** Interleaved-docs → candidate domains with a stable global seq derived
-    * from (doc key, span offset) — no global zipWithIndex, so the seq is
-    * identical at any parallelism. Doc key: the doc_id's digit run when it
-    * has one of sane width (input corpora carry their index digits, and
-    * FIFO order = doc order); otherwise a hash key in a disjoint upper
-    * range (deterministic, ANSI-safe — no cast of "" or 100-digit runs).
-    * Offsets clamp at 2^22-1; residual seq ties are broken downstream by
-    * the canonical domain, so ordering stays total.
-    *
-    * Range discipline: digit docKeys < 10^12, hash docKeys ∈ [10^12, 2^40),
-    * so EVERY seed seq < 2^40·2^22 = 2^62 — strictly below the discovery
-    * seq base ([[toFrontierDiscovered]] uses [2^62, 2^62+2^40)), which
-    * keeps "discovered hosts order after same-priority seeds" true for
-    * hash-keyed corpora too, not just digit-keyed ones.
-    */
-  def extractSeeds(docs: Dataset[Doc]): Dataset[(String, Long)] = {
-    val digits = regexp_extract(col("doc_id"), "(\\d+)", 1)
-    val docKey = when(length(digits).between(1, 12), digits.cast("long"))
-      .otherwise(pmod(xxhash64(col("doc_id")), lit((1L << 40) - 1000000000000L))
-        + lit(1000000000000L))
-    docs.select(col("doc_id"), explode(col("spans")).as("s"))
-      .where(col("s.kind") === "text")
-      .select(col("s.text").as("domain"),
-        (docKey * lit(1L << 22) + least(col("s.offset"), lit((1L << 22) - 1))).as("seq"))
-      .where(col("domain").rlike("^[\\p{L}0-9.-]+\\.[\\p{L}]{2,}\\.?\\s*$"))
-      .as[(String, Long)]
-  }
 
   /** Canonicalize → punycode → xxHash64 → first-enqueue dedup (D1: RQ
     * job_id = domain; first occurrence wins) → scheduling attributes.
@@ -340,11 +352,7 @@ class Engine(
   /** Discovered (host, depth) pairs → frontier entries. Twin of
     * [[toFrontier]] with two differences: the dedup keeps the MIN depth
     * (two parents at different depths → the shallower wins, so the depth
-    * cap is never pessimistic), and seq lives in [2^62, 2^62+2^40) —
-    * derived from the canonical host's hash, disjoint from every
-    * doc-derived seed seq (docKey < 2^40 ⇒ seed seq < 2^62, see
-    * [[extractSeeds]]) — deterministic at any parallelism, and discovered
-    * hosts order after same-priority seeds instead of racing them.
+    * cap is never pessimistic), and seq is [[Engine.discoverySeq]].
     */
   private def toFrontierDiscovered(hosts: Dataset[(String, Int)])
       : Dataset[FrontierEntry] = {
@@ -354,8 +362,7 @@ class Engine(
       .groupBy(col("canonical"))
       .agg(min(col("domain")).as("domain"), min(col("depth")).as("depth"))
       .withColumn("key", xxhash64(col("canonical")))
-      .withColumn("seq",
-        lit(1L << 62) + pmod(xxhash64(lit("disc"), col("canonical")), lit(1L << 40)))
+      .withColumn("seq", discoverySeq(col("canonical")))
       .select("domain", "seq", "canonical", "key", "depth")
       .as[(String, Long, String, Long, Int)]
       .map { case (domain, seq, canonical, key, depth) =>
@@ -795,27 +802,30 @@ class Engine(
         // partitioning is deterministic, so re-executing the probes always
         // reproduces the same per-partition probe caches and results.
         //
-        // Results, spans, and discovery each consume the probe output as
-        // a SEPARATE action, and the probes re-run per pass (they cost
-        // ~0.5 ms-core/domain, perfbench `probes.cpu_ms_per_domain`). The
-        // passes share one RDD, not a Dataset: a Dataset of DomainResult
-        // puts the 1,628-leaf serializer tree in every pass's plan, which
-        // Spark re-derives, re-analyses and re-renders per query, and whose
-        // generated classes it recompiles every round (the 100-entry
-        // codegen cache is evicted between rounds) — the larger part of a
+        // Results and (with discovery on) discovery each consume the
+        // probe output as a SEPARATE action, and the probes re-run per
+        // pass: they cost ~0.5 ms-core/domain (perfbench
+        // `probes.cpu_ms_per_domain`), less than persisting the wide rows
+        // (README "Round commits"). The passes share one RDD, not a
+        // Dataset: a Dataset of DomainResult puts the 1,628-leaf
+        // serializer tree in every pass's plan, which Spark re-derives,
+        // re-analyses and re-renders per query, and whose generated
+        // classes it recompiles every round (the 100-entry codegen cache
+        // is evicted between rounds) — the larger part of a
         // politeness-sized round (BENCH.md "Loop phase anatomy"). Over the
         // RDD, the results pass encodes through [[Engine.ResultRows]]'
-        // pooled serializers, the spans pass serializes only (doc_id,
-        // spans), and discovery only (host, depth).
+        // pooled serializers, and discovery serializes only (host, depth).
         //
         // Re-running the probes is only sound under the ProbeService
-        // determinism contract. A non-deterministic (real-socket) service
-        // would let the passes observe DIFFERENT responses — results and
-        // spans could diverge for the same domain, and every domain would
-        // be fetched up to 3× per round, defeating the politeness budget —
-        // so the round's probe output is persisted once instead.
+        // determinism contract. Under a non-deterministic (real-socket)
+        // service or clock the discovery pass could observe DIFFERENT
+        // responses than the committed results, and every domain would be
+        // fetched twice per round, defeating the politeness budget — so
+        // when a second pass exists, the round's probe output is persisted
+        // once instead.
         val probed0 = timed("crawl_plan")(probeRanked(sel.ranked, nSelected))
-        val multiPassUnsafe = !svc.deterministic || !clock.deterministic
+        val multiPassUnsafe =
+          discovery.enabled && (!svc.deterministic || !clock.deterministic)
         val probed =
           if (multiPassUnsafe) probed0.persist(StorageLevel.MEMORY_AND_DISK)
           else probed0
@@ -831,13 +841,7 @@ class Engine(
         // retried/speculative task would double-count.
         val nCrawled = nSelected
 
-        // Pass 2 — span re-encoding (the interleaved-docs table). The
-        // result tree is walked once while JVM-resident and never
-        // Tungsten-encoded here.
-        timed("commit_spans")(spansT.mergeCommit(
-          spark.createDataset(probed.map(t => SpanCodec.encode(t._3))).toDF()))
-
-        // Pass 3 (5b) — discovery: hosts found in this round's results
+        // Pass 2 (5b) — discovery: hosts found in this round's results
         // re-enter the frontier as depth+1 entries (the parent depth is
         // the probed entry's own), deduped against everything ever
         // admitted via THIS round's filter snapshots (so a host that is
@@ -864,9 +868,9 @@ class Engine(
           } else discAdmitted.unpersist()
         }
 
-        // 6. Remaining MERGE commits: backlog + checkpoint (results and
-        // spans committed by their passes above — commit_results pays the
-        // probe + wide encode + write; commit_spans probe + spans only).
+        // 6. Remaining MERGE commits: backlog + checkpoint (results
+        // committed by its pass above — commit_results pays the probe +
+        // wide encode + write).
         // Backlog rows are narrow; coalesce caps the per-round file count
         // (the 32-core loop once ran SLOWER than 8-core purely on
         // near-empty commit files — 73 vs 47 s/round).
@@ -908,8 +912,8 @@ class Engine(
         // every round (frontier build) and the checkpoint at every run's
         // start, so their read cost otherwise grows linearly with rounds —
         // the same reason Iceberg schedules its rewrite (compaction)
-        // action on hot tables. Results/spans are only read after the run;
-        // they stay append-only.
+        // action on hot tables. Results are only read after the run; they
+        // stay append-only.
         if (round % 8 == 0)
           timed("compact") { backlogT.compact(); checkpointT.compact() }
 
@@ -940,6 +944,11 @@ class Engine(
   }
 
   def resultsTable: SnapTable = resultsT
-  def spansTable: SnapTable = spansT
+  /** The span table: a read-time view of the results table
+    * ([[SpanCodec.view]]), one span document per result row.
+    */
+  object spansTable {
+    def read(): Option[DataFrame] = resultsT.read().map(SpanCodec.view)
+  }
   def checkpointTable: SnapTable = checkpointT
 }

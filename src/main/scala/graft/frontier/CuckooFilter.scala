@@ -130,12 +130,6 @@ final class CuckooFilter private (
     stash.size <= StashWarn
   }
 
-  def insertAll(keys: Iterator[Long]): Boolean = {
-    var ok = true
-    keys.foreach(k => ok &= insert(k))
-    ok
-  }
-
   /** Bit-exact snapshot whose size follows the occupied slots, not the
     * capacity:
     *

@@ -58,9 +58,6 @@ object TextOps {
     size(filter(tokens(lower(text)), t => array_contains(stops, t)))
   }
 
-  def punctCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))
-
   /** Quality score in [0,1000], integer arithmetic end-to-end:
     * floor(1000 * stopword_tokens / tokens) — the reference signal a
     * Gopher/C4-style quality filter thresholds on.
@@ -264,13 +261,6 @@ object TextOps {
     require(i >= 0 && i < 8, "chunk family provides 8 components")
     if (i < 4) substring(md5(shingle.cast("binary")), 1 + 8 * i, 8)
     else substring(md5(concat(lit("~"), shingle).cast("binary")), 1 + 8 * (i - 4), 8)
-  }
-
-  /** Full MinHash signature as a struct of `n ≤ 8` chunk minima. */
-  def minhashSignature(text: Column, shingleK: Int, n: Int): Column = {
-    val sh = shingles(text, shingleK)
-    struct((0 until n).map(i =>
-      array_min(transform(sh, s => minhashChunk(s, i))).as(s"mh$i")): _*)
   }
 
   // ----------------------------------------------------------- simhash

@@ -28,13 +28,14 @@ trait ProbeService extends Serializable {
   /** Determinism contract: `true` (default) declares every leaf a pure
     * function of its arguments — same call, same answer, on every
     * executor, for the lifetime of a run. The engine exploits this by
-    * consuming one round's probe pipeline as several pruned passes
-    * (results / spans / discovery), re-executing the cheap probes instead
+    * consuming one round's probe pipeline as two pruned passes (results,
+    * then discovery when it is on), re-executing the cheap probes instead
     * of caching the expensive wide rows. A real socket-backed service
-    * MUST override this to `false`: the engine then persists each round's
-    * results once (`MEMORY_AND_DISK`) so all passes observe the same
+    * MUST override this to `false`: a discovering round then persists its
+    * probe output once (`MEMORY_AND_DISK`) so both passes observe the same
     * responses and no domain is fetched more than once per round
-    * (politeness), at the cost of one wide-row materialization.
+    * (politeness), at the cost of one wide-row materialization. Without
+    * discovery a round has one pass and persists nothing.
     */
   def deterministic: Boolean = true
 

@@ -2,6 +2,8 @@ package graft.spans
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.DataFrame
+
 import graft.model.Model._
 
 /** Canonical span-sequence encoding of a [[DomainResult]] — the per-row
@@ -235,5 +237,15 @@ object SpanCodec {
     })
     r.worker_hostname.foreach(h => b.add("worker_hostname", h))
     Doc(r.domain, b.buf.toSeq)
+  }
+
+  /** The span table as a view of a results table: one `Doc` per row,
+    * [[encode]] of its `result` column (`doc_id` = the result's domain,
+    * the results table's MERGE key). Both results layouts carry `result`
+    * ([[graft.engine.Engine.ResultRow]] and `StreamResultRow`).
+    */
+  def view(results: DataFrame): DataFrame = {
+    import results.sparkSession.implicits._
+    results.select("result.*").as[DomainResult].map(encode).toDF()
   }
 }

@@ -10,7 +10,6 @@ import graft.canon.Canon
 import graft.engine.Engine
 import graft.model.Model._
 import graft.probes.{CrawlConfig, Probes}
-import graft.spans.SpanCodec
 import graft.tables.SnapTable
 import graft.universe.Universe
 
@@ -26,9 +25,12 @@ import graft.universe.Universe
   *   the batch engine's deferred backlog) → probe fan-out → nested
   *   [[DomainResult]] rows for any sink.
   *
-  * Semantics match the batch engine: same canonicalization, same
-  * first-enqueue dedup, same per-bucket budget ordering
-  * (priority, seq, canonical), same probe leaves.
+  * Semantics match the batch engine: same seed seq
+  * ([[graft.engine.Engine.extractSeeds]]), same canonicalization, same
+  * per-bucket budget ordering (priority, seq, canonical), same probe
+  * leaves. One difference: among raw variants of one canonical domain
+  * (`S1.CZ` / `s1.cz`), the stream keeps the first variant admitted,
+  * where the batch engine keeps the min-seq one.
   */
 object StreamingCrawl {
 
@@ -74,13 +76,7 @@ object StreamingCrawl {
   /** Doc stream → seed frontier entries (depth 0), pre-admission. */
   def seedEntries(docs: Dataset[Doc], u: Universe): Dataset[FrontierEntry] = {
     import docs.sparkSession.implicits._
-    docs
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .where(col("s.kind") === "text")
-      .select(col("s.text").as("domain"),
-        (xxhash64(col("doc_id")) .bitwiseAND(lit(0xffffffffL)) * lit(1L << 22)
-          + least(col("s.offset"), lit((1L << 22) - 1))).as("seq"))
-      .where(col("domain").rlike("^[\\p{L}0-9.-]+\\.[\\p{L}]{2,}\\.?\\s*$"))
+    Engine.extractSeeds(docs).toDF("domain", "seq")
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
       .withColumn("key", xxhash64(col("canonical")))
       .as[(String, Long, String, Long)]
@@ -116,18 +112,6 @@ object StreamingCrawl {
       }
   }
 
-  /** MERGE-commit a streaming crawl into the batch engine's table layout:
-    * every micro-batch upserts the raw results (keyed by domain) and the
-    * span re-encoding (keyed by doc_id) through the same idempotent
-    * [[graft.tables.SnapTable.mergeCommit]] the batch loop uses, under a
-    * Structured-Streaming checkpoint. The combination gives effectively-
-    * once tables: the stream replays an uncommitted micro-batch after a
-    * crash (at-least-once), and the keyed MERGE absorbs the replay —
-    * exactly the batch loop's T8 story. The resulting span table is
-    * bit-identical to `Engine.run`'s for the same seed corpus
-    * (StreamingCrawlSpec), so downstream consumers cannot tell which
-    * engine produced it.
-    */
   /** Self-feeding DISCOVERING crawl stream with MERGE-committed tables —
     * the streaming twin of `Engine.run(discovery = on)`: hosts found in
     * each micro-batch's results (redirect targets, MX hosts, in-content
@@ -172,8 +156,7 @@ object StreamingCrawl {
     val discEntries = spark.readStream.schema(discSchema).parquet(discDir)
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("host")))
       .withColumn("key", xxhash64(col("canonical")))
-      .withColumn("seq",
-        lit(1L << 62) + pmod(xxhash64(lit("disc"), col("canonical")), lit(1L << 40)))
+      .withColumn("seq", Engine.discoverySeq(col("canonical")))
       .select(col("host").as("domain"), col("seq"), col("canonical"),
         col("key"), col("depth"))
       .as[(String, Long, String, Long, Int)]
@@ -217,6 +200,17 @@ object StreamingCrawl {
       .start()
   }
 
+  /** MERGE-commit a streaming crawl into the batch engine's results
+    * table: every micro-batch upserts its results (keyed by domain)
+    * through the same idempotent [[graft.tables.SnapTable.mergeCommit]]
+    * the batch loop uses, under a Structured-Streaming checkpoint. The
+    * combination gives an effectively-once table: the stream replays an
+    * uncommitted micro-batch after a crash (at-least-once), and the keyed
+    * MERGE absorbs the replay — exactly the batch loop's T8 story. The
+    * span view over it ([[graft.spans.SpanCodec.view]]) is bit-identical
+    * to `Engine.run`'s for the same seed corpus (StreamingCrawlSpec), so
+    * downstream consumers cannot tell which engine produced it.
+    */
   def commitStream(results: Dataset[DomainResult], workDir: String,
       checkpointDir: String,
       trigger: org.apache.spark.sql.streaming.Trigger =
@@ -227,32 +221,18 @@ object StreamingCrawl {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[DomainResult], _: Long) =>
-        if (!batch.isEmpty) {
-          // persisted: the two commits must observe the SAME probe
-          // responses even under a non-deterministic (real-socket)
-          // ProbeService upstream, and no domain may be fetched twice per
-          // micro-batch (politeness). Batches are politeness-bounded, so
-          // the materialization is small by construction.
-          val b = batch.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          try commitBatch(batch.sparkSession, workDir, b)
-          finally b.unpersist()
-        }
+        if (!batch.isEmpty) commitBatch(batch.sparkSession, workDir, batch.rdd)
         ()
       }
       .start()
   }
 
-  /** One micro-batch's MERGE commits: the span re-encoding, then the
-    * results through the batch engine's pooled wide-row serializers
-    * ([[graft.engine.Engine.WideRows]]).
+  /** One micro-batch's MERGE commit of its results through the batch
+    * engine's pooled wide-row serializers ([[graft.engine.Engine.WideRows]]).
     */
   private def commitBatch(spark: SparkSession, workDir: String,
-      results: RDD[DomainResult]): Unit = {
-    import spark.implicits._
-    new SnapTable(spark, s"$workDir/result_spans", Seq("doc_id"))
-      .mergeCommit(spark.createDataset(results.map(SpanCodec.encode)).toDF())
+      results: RDD[DomainResult]): Unit =
     new SnapTable(spark, s"$workDir/results", Seq("domain"))
       .mergeCommit(Engine.StreamResultRows.frame(spark,
         results.map(r => Engine.StreamResultRow(r.domain, r))))
-  }
 }

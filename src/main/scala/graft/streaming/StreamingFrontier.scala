@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.frontier.CuckooFilter
@@ -63,21 +62,5 @@ object StreamingFrontier {
             fresh.iterator
           }
       }
-  }
-
-  /** Per-nameserver-bucket throughput metrics over event time — the
-    * streaming twin of the engine's per-round fetch counters (watermark
-    * bounds state like the reference's 80 s job timeout bounds stragglers).
-    */
-  def bucketThroughput(admitted: Dataset[FrontierEntry],
-      eventTime: Dataset[FrontierEntry] => Dataset[(FrontierEntry, java.sql.Timestamp)])
-      : Dataset[(Int, Long)] = {
-    import admitted.sparkSession.implicits._
-    eventTime(admitted).toDF("e", "ts")
-      .withWatermark("ts", "10 seconds")
-      .groupBy(window(col("ts"), "5 seconds"), col("e.nsBucket"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("nsBucket").cast("int"), col("n").cast("long"))
-      .as[(Int, Long)]
   }
 }

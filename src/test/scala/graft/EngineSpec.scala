@@ -15,6 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
 import graft.model.Model.{Doc, DomainResult, Span}
+import graft.spans.SpanCodec
 import graft.universe.Universe
 
 /** Tight per-round budgets so the politeness/backlog path is exercised at
@@ -40,7 +41,7 @@ class EngineSpec extends AnyFunSuite {
   /** Spark jobs of one resumed `Engine.run` round with discovery on
     * ("a resumed round runs a pinned number of Spark jobs").
     */
-  private val RoundJobs = 35
+  private val RoundJobs = 34
 
   /** Seed corpus: interleaved docs whose text spans carry domains (with
     * planted case/trailing-dot/IDN/duplicate variants via
@@ -222,13 +223,16 @@ class EngineSpec extends AnyFunSuite {
 
     assert(resultKeys(newEngine(dirFull)) == resultKeys(newEngine(dirResume)))
 
-    // span-sequence table equality: per-row (kind, text, media_ref, order)
-    def spanRows(dir: String) = newEngine(dir).spansTable.read().get
+    // span-sequence equality: per-row (kind, text, media_ref, order) of
+    // the span view over each side's results table
+    def spanRows(dir: String) = SpanCodec.view(newEngine(dir).resultsTable.read().get)
       .selectExpr("doc_id", "explode(spans) AS s")
       .selectExpr("doc_id", "s.kind", "coalesce(s.text, '∅') AS t",
         "coalesce(s.media_ref, '∅') AS m", "s.offset")
       .as[(String, String, String, String, Int)].collect().sorted.toSeq
     assert(spanRows(dirFull) == spanRows(dirResume))
+    // the spans are a view: no span table is stored
+    assert(!Files.exists(java.nio.file.Paths.get(dirResume, "result_spans")))
   }
 
   test("resume across a compaction boundary reproduces the uninterrupted run") {
@@ -317,7 +321,7 @@ class EngineSpec extends AnyFunSuite {
       Doc("b-7", Seq(Span("text", "gamma.cz", null, 0))),   // ...as this one
       Doc("x" + "9" * 40, Seq(Span("text", "delta.cz", null, 0))) // absurd digit run
     ))
-    val seeds = eng.extractSeeds(docs).collect()
+    val seeds = Engine.extractSeeds(docs).collect()
     assert(seeds.map(_._1).sorted.toSeq == Seq("alpha.cz", "beta.cz", "delta.cz", "gamma.cz"))
     // colliding doc keys still crawl BOTH domains (tie broken by canonical)
     val stats = eng.run(docs)

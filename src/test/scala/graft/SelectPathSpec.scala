@@ -154,33 +154,35 @@ class SelectPathSpec extends AnyFunSuite {
     assert(digest(engRes) == digest(engFull))
   }
 
-  test("non-deterministic probe service: each domain is probed exactly once per round (results persisted, passes share them)") {
-    val id = "nondet-" + System.nanoTime()
-    val svc = new CountingProbeService(u, id, det = false)
-    val dir = graft.TmpDirs.create("selpath-nondet").toString
-    val eng = new Engine(spark, u, cfg = contentCfg, workDir = dir,
+  // runs a 40-domain crawl against a counting service and checks that
+  // every crawled domain was probed exactly perDomain times
+  private def assertProbesPerDomain(det: Boolean, disc: Boolean, perDomain: Long): Unit = {
+    val id = s"probes-$det-$disc-" + System.nanoTime()
+    val svc = new CountingProbeService(u, id, det)
+    val eng = new Engine(spark, u, cfg = contentCfg,
+      workDir = graft.TmpDirs.create("selpath-probes").toString,
       frontierPartitions = 8, probeService = svc,
-      discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
+      discovery = if (disc) Engine.DiscoveryConfig.on.copy(maxDepth = 1)
+        else Engine.DiscoveryConfig.off)
     eng.run(seedDocs(40))
     val counts = CountingProbeService.countsFor(id)
     val crawled = eng.resultsTable.read().get.select("domain").as[String].collect().toSet
-    assert(counts.keySet == crawled)
-    val multi = counts.filter(_._2 != 1L)
-    assert(multi.isEmpty,
-      s"domains probed more than once per round under a non-deterministic service: $multi")
+    assert(counts.keySet == crawled, s"deterministic=$det discovery=$disc")
+    val off = counts.filter(_._2 != perDomain)
+    assert(off.isEmpty, s"deterministic=$det discovery=$disc: expected $perDomain " +
+      s"probes per domain; ${off.size} domains got ${off.values.toSet.mkString("/")}")
+  }
+
+  test("non-deterministic probe service: each domain is probed exactly once per round (results persisted, passes share them)") {
+    assertProbesPerDomain(det = false, disc = true, perDomain = 1L)
   }
 
   test("deterministic probe service (the default): passes re-execute the cheap probes instead of caching wide rows") {
-    val id = "det-" + System.nanoTime()
-    val svc = new CountingProbeService(u, id, det = true)
-    val dir = graft.TmpDirs.create("selpath-det").toString
-    val eng = new Engine(spark, u, cfg = contentCfg, workDir = dir,
-      frontierPartitions = 8, probeService = svc,
-      discovery = Engine.DiscoveryConfig.on.copy(maxDepth = 1))
-    eng.run(seedDocs(40))
-    val counts = CountingProbeService.countsFor(id)
-    // results + spans (+ discovery) passes each re-probe: >1 per domain
-    assert(counts.values.exists(_ > 1L),
-      "expected multi-pass probe re-execution under the deterministic contract")
+    // one probe for the results pass, one for the discovery pass
+    assertProbesPerDomain(det = true, disc = true, perDomain = 2L)
+  }
+
+  test("deterministic probe service, discovery off: one probe per domain") {
+    assertProbesPerDomain(det = true, disc = false, perDomain = 1L)
   }
 }

@@ -1,12 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Model.{Doc, DomainResult, Span}
 import graft.probes.{CrawlConfig, Probes}
+import graft.spans.SpanCodec
 import graft.streaming.StreamingCrawl
+import graft.tables.SnapTable
 import graft.universe.Universe
 
 /** One nameserver bucket so the per-batch token budget is observable. */
@@ -23,6 +27,16 @@ class StreamingCrawlSpec extends AnyFunSuite {
 
   private def doc(id: String, domains: String*): Doc =
     Doc(id, domains.zipWithIndex.map { case (d, i) => Span("text", d, null, i) })
+
+  /** Per-row (doc_id, kind, text, media_ref, offset) of the span view
+    * over the results table under `dir`.
+    */
+  private def spanRows(dir: String): Seq[(String, String, String, String, Int)] =
+    SpanCodec.view(new SnapTable(spark, s"$dir/results", Seq("domain")).read().get)
+      .selectExpr("doc_id", "explode(spans) AS s")
+      .selectExpr("doc_id", "s.kind", "coalesce(s.text, '\\0') AS text",
+        "coalesce(s.media_ref, '\\0') AS media_ref", "s.offset")
+      .as[(String, String, String, String, Int)].collect().sorted.toSeq
 
   test("token-bucket politeness: per-micro-batch budget, deferred entries drain via timer") {
     implicit val sqlCtx = spark.sqlContext
@@ -95,10 +109,42 @@ class StreamingCrawlSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("the stream's seed seq equals the batch engine's for the same corpus") {
+    implicit val sqlCtx = spark.sqlContext
+    // no raw variants of one domain: both engines then admit the same
+    // rows, and only the seq formula can differ
+    val docs = Seq(
+      doc("doc-1", "q1.cz", "q2.cz", "nic.cz"),
+      doc("doc-7", "q3.cz"),
+      doc("intro", "q4.cz", "q5.cz")) // digit-less id: hash-keyed seq
+    val batchDir = graft.TmpDirs.create("seq-batch").toString
+    new graft.engine.Engine(spark, u, workDir = batchDir, frontierPartitions = 4)
+      .run(spark.createDataset(docs))
+    val batch = new SnapTable(spark, s"$batchDir/backlog", Seq("canonical")).read().get
+      .select("canonical", "seq").as[(String, Long)].collect().sorted.toSeq
+
+    val input = MemoryStream[Doc]
+    val q = StreamingCrawl.frontierStream(input.toDS(), u, partitions = 4,
+        budgetPerBatch = _ => 100)
+      .select("canonical", "seq")
+      .writeStream.format("memory").queryName("seq_out")
+      .outputMode("append").trigger(Trigger.ProcessingTime("200 milliseconds")).start()
+    try {
+      input.addData(docs: _*)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (spark.table("seq_out").count() < 6 && System.nanoTime() < deadline) {
+        q.exception.foreach(throw _)
+        Thread.sleep(200)
+      }
+      val stream = spark.table("seq_out").as[(String, Long)].collect().sorted.toSeq
+      assert(batch.length == 6)
+      assert(stream == batch, "stream and batch seed seqs differ")
+    } finally q.stop()
+  }
+
   test("MERGE-committed streaming span table is bit-identical to the batch " +
       "engine's for the same seed corpus") {
     implicit val sqlCtx = spark.sqlContext
-    import java.nio.file.Files
     val docs = Seq(
       doc("doc-0", "s1.cz", "s2.cz", "nic.cz"),
       doc("doc-1", "s3.cz", "S1.CZ"), // cross-doc duplicate (case variant)
@@ -109,11 +155,7 @@ class StreamingCrawlSpec extends AnyFunSuite {
     val eng = new graft.engine.Engine(spark, u, workDir = batchDir,
       frontierPartitions = 4)
     eng.run(spark.createDataset(docs))
-    val batchSpans = eng.spansTable.read().get
-      .selectExpr("doc_id", "explode(spans) AS s")
-      .selectExpr("doc_id", "s.kind", "coalesce(s.text, '\\0') AS text",
-        "coalesce(s.media_ref, '\\0') AS media_ref", "s.offset")
-      .as[(String, String, String, String, Int)].collect().sorted.toSeq
+    val batchSpans = spanRows(batchDir)
 
     // streaming: same docs through crawlStream + commitStream
     val streamDir = graft.TmpDirs.create("parity-stream").toString
@@ -124,42 +166,31 @@ class StreamingCrawlSpec extends AnyFunSuite {
     val q = StreamingCrawl.commitStream(results, streamDir, ckpt)
     try {
       input.addData(docs: _*)
-      val spansT = new graft.tables.SnapTable(spark,
-        s"$streamDir/result_spans", Seq("doc_id"))
-      val resultsPoll = new graft.tables.SnapTable(spark,
-        s"$streamDir/results", Seq("domain"))
+      val resultsT = new SnapTable(spark, s"$streamDir/results", Seq("domain"))
       val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      // poll BOTH tables: spans commit first within a micro-batch, so a
-      // spans-only poll can observe the gap before the results commit
-      def committed: Long = math.min(
-        spansT.read().map(_.select("doc_id").distinct().count()).getOrElse(0L),
-        resultsPoll.read().map(_.select("domain").distinct().count()).getOrElse(0L))
+      def committed: Long =
+        resultsT.read().map(_.select("domain").distinct().count()).getOrElse(0L)
       while (committed < 6 && System.nanoTime() < deadline) {
         q.exception.foreach(throw _)
         Thread.sleep(300)
       }
       assert(committed == 6, s"streaming commits incomplete: $committed/6")
-      val streamSpans = spansT.read().get
-        .selectExpr("doc_id", "explode(spans) AS s")
-        .selectExpr("doc_id", "s.kind", "coalesce(s.text, '\\0') AS text",
-          "coalesce(s.media_ref, '\\0') AS media_ref", "s.offset")
-        .as[(String, String, String, String, Int)].collect().sorted.toSeq
-      assert(streamSpans == batchSpans,
-        "streaming span table diverges from the batch engine's")
+      assert(spanRows(streamDir) == batchSpans,
+        "streaming span view diverges from the batch engine's")
       // and the results table round-trips to the same document set
-      val resultsT = new graft.tables.SnapTable(spark,
-        s"$streamDir/results", Seq("domain"))
       val streamDomains = resultsT.read().get.select("domain").as[String]
         .collect().toSet
       assert(streamDomains ==
         Set("s1.cz", "s2.cz", "s3.cz", "s4.cz", "s5.cz", "nic.cz"))
+      // the spans are a view: neither engine stores a span table
+      assert(!Files.exists(Paths.get(batchDir, "result_spans")) &&
+        !Files.exists(Paths.get(streamDir, "result_spans")))
     } finally q.stop()
   }
 
   test("self-feeding discovering stream equals the batch discovering engine " +
       "(maxDepth 1): same crawled set, same span rows") {
     implicit val sqlCtx = spark.sqlContext
-    import java.nio.file.Files
     // seed hosts that discover (MX/redirect/link targets in the universe)
     val docs = (0 until 12).map(i => doc(f"doc-$i%03d", s"shop$i.cz"))
     val dcfg = graft.engine.Engine.DiscoveryConfig.on.copy(maxDepth = 1)
@@ -172,14 +203,6 @@ class StreamingCrawlSpec extends AnyFunSuite {
     val batchDomains = eng.resultsTable.read().get
       .select("domain").as[String].collect().toSet
     assert(batchDomains.size > 12, "expected discoveries beyond the 12 seeds")
-    def spanRows(dir: String) = {
-      val t = new graft.tables.SnapTable(spark, s"$dir/result_spans", Seq("doc_id"))
-      t.read().get
-        .selectExpr("doc_id", "explode(spans) AS s")
-        .selectExpr("doc_id", "s.kind", "coalesce(s.text, '\\0') AS text",
-          "coalesce(s.media_ref, '\\0') AS media_ref", "s.offset")
-        .as[(String, String, String, String, Int)].collect().sorted.toSeq
-    }
     val batchSpans = spanRows(batchDir)
 
     // streaming: same docs through the self-feeding discovering stream
@@ -192,8 +215,7 @@ class StreamingCrawlSpec extends AnyFunSuite {
       partitions = 4, budgetPerBatch = _ => 100)
     try {
       input.addData(docs: _*)
-      val resultsT = new graft.tables.SnapTable(spark,
-        s"$streamDir/results", Seq("domain"))
+      val resultsT = new SnapTable(spark, s"$streamDir/results", Seq("domain"))
       def streamed: Set[String] = resultsT.read()
         .map(_.select("domain").as[String].collect().toSet).getOrElse(Set.empty)
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
@@ -205,7 +227,7 @@ class StreamingCrawlSpec extends AnyFunSuite {
         s"streaming crawled set diverges: missing=${batchDomains -- streamed} " +
           s"extra=${streamed -- batchDomains}")
       assert(spanRows(streamDir) == batchSpans,
-        "streaming discovering span table diverges from the batch engine's")
+        "streaming discovering span view diverges from the batch engine's")
     } finally q.stop()
   }
 }
