@@ -54,10 +54,16 @@ import graft.universe.Universe
   * per round; Spark's shuffle replaces the queue, Tungsten replaces pickle.
   */
 object Engine {
-  /** One row of the results table. */
-  case class ResultRow(domain: String, pop_round: Int, pop_rank: Long, result: DomainResult)
+  /** One row of the results table. `depth` is the probed entry's frontier
+    * depth and `discovered` the hosts its result yields for the frontier
+    * ([[DiscoveryConfig.hostsOf]]), stored with the result so discovery
+    * reads them back instead of probing again.
+    */
+  case class ResultRow(domain: String, pop_round: Int, pop_rank: Long, depth: Int,
+      discovered: Seq[String], result: DomainResult)
   /** One row of the streaming crawl's results table (no pop order). */
-  case class StreamResultRow(domain: String, result: DomainResult)
+  case class StreamResultRow(domain: String, depth: Int, discovered: Seq[String],
+      result: DomainResult)
   case class BacklogRow(domain: String, canonical: String, key: Long,
       nsBucket: Int, priority: Int, seq: Long, depth: Int, active: Boolean)
   case class RoundStats(round: Int, admitted: Long, crawled: Long,
@@ -68,8 +74,8 @@ object Engine {
         * costs at politeness-bounded sizes, so the breakdown is
         * first-class observability, not debug output. `crawl_plan` builds
         * the probe stage (range bounds, the layout shuffle); the probes
-        * themselves land inside `commit_results` and `discover` (each is
-        * a separate pass over them).
+        * themselves, one pass, land inside `commit_results`. `discover`
+        * reads the hosts back from the committed delta and admits them.
         */
       phases: Map[String, Double] = Map.empty)
 
@@ -97,7 +103,13 @@ object Engine {
         */
       fromLinks: Boolean = true,
       maxPerDomain: Int = 16,
-      maxDepth: Int = 2)
+      maxDepth: Int = 2) {
+    /** The hosts a result at frontier `depth` contributes: none when
+      * discovery is off or the depth cap is reached.
+      */
+    def hostsOf(r: DomainResult, depth: Int): Seq[String] =
+      if (enabled && depth < maxDepth) discoveredHosts(r, r.domain, this) else Seq.empty
+  }
   object DiscoveryConfig {
     val off: DiscoveryConfig = DiscoveryConfig()
     val on: DiscoveryConfig = DiscoveryConfig(enabled = true)
@@ -108,17 +120,10 @@ object Engine {
     * resume bit-equality, the N-vs-4N ordering digests, the oracle
     * scoreboard — needs a fixed stamp, so [[Clock.fixed]] is the default
     * and wall time is opt-in (library: `clock = Engine.Clock.utcWall`;
-    * CLI: `--real-timestamps`). A non-deterministic clock, exactly like a
-    * non-deterministic [[graft.probes.ProbeService]], stops a round from
-    * re-probing for its second pass: with discovery on, the round's probe
-    * output persists once, so the results and discovery passes read the
-    * same documents.
+    * CLI: `--real-timestamps`). A round stamps each domain once: its one
+    * probe pass calls `now()` once per domain.
     */
   trait Clock extends Serializable {
-    /** Same contract as `ProbeService.deterministic`: `true` promises
-      * `now()` is a constant for the lifetime of a run.
-      */
-    def deterministic: Boolean
     def now(): String
   }
   object Clock {
@@ -126,7 +131,6 @@ object Engine {
     private val UtcFmt =
       java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
     object fixed extends Clock {
-      val deterministic = true
       def now(): String = fixedStamp
     }
     /** Real wall clock in the reference's format: `%Y-%m-%d %H:%M:%S`
@@ -134,7 +138,6 @@ object Engine {
       * `process_domain` (`crawl.py:167`).
       */
     object utcWall extends Clock {
-      val deterministic = false
       def now(): String =
         java.time.LocalDateTime.now(java.time.ZoneOffset.UTC).format(UtcFmt)
     }
@@ -177,7 +180,10 @@ object Engine {
       * RDD scan.
       */
     def frame(spark: SparkSession, rows: RDD[T]): DataFrame =
-      GraftSqlBridge.internalCreateDataFrame(spark, rows.mapPartitions(encode), encoder.schema)
+      GraftSqlBridge.internalCreateDataFrame(spark, rows.mapPartitions(encode), schema)
+
+    /** `T`'s encoder schema: the stored schema of the rows [[frame]] commits. */
+    def schema: StructType = encoder.schema
   }
   object ResultRows extends WideRows[ResultRow]
   object StreamResultRows extends WideRows[StreamResultRow]
@@ -220,6 +226,30 @@ object Engine {
     */
   def discoverySeq(canonical: Column): Column =
     lit(1L << 62) + pmod(xxhash64(lit("disc"), canonical), lit(1L << 40))
+
+  /** Frontier entries from rows with `domain`, `canonical`, `key`, `seq`
+    * and `depth` columns; the scheduling attributes (nameserver bucket,
+    * TTL priority) come from `u`. Seeds and discovered hosts, batch and
+    * stream, all enter the frontier through here.
+    */
+  def frontierEntries(u: Universe, rows: DataFrame): Dataset[FrontierEntry] = {
+    import rows.sparkSession.implicits._
+    rows.select("domain", "canonical", "key", "seq", "depth")
+      .as[(String, String, Long, Long, Int)]
+      .map { case (domain, canonical, key, seq, depth) =>
+        FrontierEntry(domain, canonical, key,
+          nsBucket = u.nsProvider(canonical),
+          priority = u.ttlFor(canonical), // TTL-derived priority
+          seq = seq, depth = depth)
+      }
+  }
+
+  /** `(host, depth)` frontier candidates of committed result rows: each
+    * row's stored `discovered` hosts, one level below the row's depth.
+    * Reads two narrow columns, never the result document.
+    */
+  def discoveredRows(results: DataFrame): DataFrame =
+    results.select(explode(col("discovered")).as("host"), (col("depth") + 1).as("depth"))
 
   /** Column of a bucket's probe salt on the probe stage's input. */
   private val ProbeSalt = "probe_salt"
@@ -329,49 +359,29 @@ class Engine(
   /** Canonicalize → punycode → xxHash64 → first-enqueue dedup (D1: RQ
     * job_id = domain; first occurrence wins) → scheduling attributes.
     */
-  def toFrontier(seeds: Dataset[(String, Long)]): Dataset[FrontierEntry] = {
-    val u = universe
+  def toFrontier(seeds: Dataset[(String, Long)]): Dataset[FrontierEntry] =
     // first-enqueue-wins dedup as a hash aggregate with map-side partial
     // combine (cheaper than a sort-window; same semantics: min seq wins)
-    seeds.toDF("domain", "seq")
+    frontierEntries(universe, seeds.toDF("domain", "seq")
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
       .groupBy(col("canonical"))
       .agg(min_by(col("domain"), struct(col("seq"), col("domain"))).as("domain"),
         min(col("seq")).as("seq"))
       .withColumn("key", xxhash64(col("canonical")))
-      .select("domain", "seq", "canonical", "key")
-      .as[(String, Long, String, Long)]
-      .map { case (domain, seq, canonical, key) =>
-        FrontierEntry(domain, canonical, key,
-          nsBucket = u.nsProvider(canonical),
-          priority = u.ttlFor(canonical), // TTL-derived priority
-          seq = seq)
-      }
-  }
+      .withColumn("depth", lit(0)))
 
-  /** Discovered (host, depth) pairs → frontier entries. Twin of
+  /** Discovered `(host, depth)` rows → frontier entries. Twin of
     * [[toFrontier]] with two differences: the dedup keeps the MIN depth
     * (two parents at different depths → the shallower wins, so the depth
     * cap is never pessimistic), and seq is [[Engine.discoverySeq]].
     */
-  private def toFrontierDiscovered(hosts: Dataset[(String, Int)])
-      : Dataset[FrontierEntry] = {
-    val u = universe
-    hosts.toDF("domain", "depth")
+  private def toFrontierDiscovered(hosts: DataFrame): Dataset[FrontierEntry] =
+    frontierEntries(universe, hosts.toDF("domain", "depth")
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
       .groupBy(col("canonical"))
       .agg(min(col("domain")).as("domain"), min(col("depth")).as("depth"))
       .withColumn("key", xxhash64(col("canonical")))
-      .withColumn("seq", discoverySeq(col("canonical")))
-      .select("domain", "seq", "canonical", "key", "depth")
-      .as[(String, Long, String, Long, Int)]
-      .map { case (domain, seq, canonical, key, depth) =>
-        FrontierEntry(domain, canonical, key,
-          nsBucket = u.nsProvider(canonical),
-          priority = u.ttlFor(canonical),
-          seq = seq, depth = depth)
-      }
-  }
+      .withColumn("seq", discoverySeq(col("canonical"))))
 
   // -------------------------------------------------- seen-set filters
 
@@ -716,22 +726,24 @@ class Engine(
       .drop("_salt", ProbeSalt)
   }
 
-  /** One round's probe output: each selected entry with its pop rank and
-    * result document, produced by the same per-partition [[Probes]] and
-    * layout as [[crawlEntries]]. An RDD, so the passes that consume it
-    * plan no [[DomainResult]] serializer; with AQE on, building it runs
-    * the layout's shuffle once, and every pass reads that shuffle output.
+  /** One round's result rows: each selected entry probed once, by the
+    * same per-partition [[Probes]] and layout as [[crawlEntries]], with its
+    * pop order, its depth and the hosts its result yields for discovery.
+    * An RDD, so the results commit plans no [[DomainResult]] serializer:
+    * it encodes through [[Engine.ResultRows]]' pooled serializers.
     */
-  private def probeRanked(ranked: DataFrame, nSelected: Long)
-      : RDD[(FrontierEntry, Long, DomainResult)] = {
-    val (u, conf, ck) = (svc, cfg, clock)
+  private def probeRanked(ranked: DataFrame, nSelected: Long, round: Int): RDD[ResultRow] = {
+    val (u, conf, ck, dcfg) = (svc, cfg, clock, discovery)
     val entry = struct(Encoders.product[FrontierEntry].schema.fieldNames.toSeq.map(col): _*)
     probeLayout(ranked, Some(nSelected))
       .select(entry.as("_1"), col("pop_rank").as("_2"))
       .as[(FrontierEntry, Long)].rdd
       .mapPartitions { it =>
         val p = new Probes(u, conf)
-        it.map { case (e, rank) => (e, rank, p.processDomain(e.canonical, ck.now())) }
+        it.map { case (e, rank) =>
+          val r = p.processDomain(e.canonical, ck.now())
+          ResultRow(r.domain, round, rank, e.depth, dcfg.hostsOf(r, e.depth), r)
+        }
       }
   }
 
@@ -798,64 +810,29 @@ class Engine(
       if (nSelected == 0 && newWatermark == watermark) {
         done = true
       } else {
-        // 5. crawl. Task count sized to the politeness-bounded round;
-        // partitioning is deterministic, so re-executing the probes always
-        // reproduces the same per-partition probe caches and results.
-        //
-        // Results and (with discovery on) discovery each consume the
-        // probe output as a SEPARATE action, and the probes re-run per
-        // pass: they cost ~0.5 ms-core/domain (perfbench
-        // `probes.cpu_ms_per_domain`), less than persisting the wide rows
-        // (README "Round commits"). The passes share one RDD, not a
-        // Dataset: a Dataset of DomainResult puts the 1,628-leaf
-        // serializer tree in every pass's plan, which Spark re-derives,
-        // re-analyses and re-renders per query, and whose generated
-        // classes it recompiles every round (the 100-entry codegen cache
-        // is evicted between rounds) — the larger part of a
-        // politeness-sized round (BENCH.md "Loop phase anatomy"). Over the
-        // RDD, the results pass encodes through [[Engine.ResultRows]]'
-        // pooled serializers, and discovery serializes only (host, depth).
-        //
-        // Re-running the probes is only sound under the ProbeService
-        // determinism contract. Under a non-deterministic (real-socket)
-        // service or clock the discovery pass could observe DIFFERENT
-        // responses than the committed results, and every domain would be
-        // fetched twice per round, defeating the politeness budget — so
-        // when a second pass exists, the round's probe output is persisted
-        // once instead.
-        val probed0 = timed("crawl_plan")(probeRanked(sel.ranked, nSelected))
-        val multiPassUnsafe =
-          discovery.enabled && (!svc.deterministic || !clock.deterministic)
-        val probed =
-          if (multiPassUnsafe) probed0.persist(StorageLevel.MEMORY_AND_DISK)
-          else probed0
-        val dcfg = discovery
-        val popRound = round
-
-        // Pass 1 — results table, pop order attached in the encoding pass.
-        timed("commit_results")(resultsT.mergeCommit(ResultRows.frame(spark,
-          probed.map { case (_, rank, r) => ResultRow(r.domain, popRound, rank, r) })))
+        // 5. crawl + results commit: one probe pass. Task count sized to
+        // the politeness-bounded round. Each row carries its pop order, its
+        // depth and the hosts its result yields for discovery, so nothing
+        // after this commit reads a result document or re-runs a probe.
+        val probed = timed("crawl_plan")(probeRanked(sel.ranked, nSelected, round))
+        val resultsV = timed("commit_results")(resultsT.mergeCommit(ResultRows.frame(spark, probed)))
         // nCrawled ≡ nSelected by construction (the crawl stage is a 1:1
         // map over the selected set). Derived, not accumulated:
         // accumulators are exactly-once only for actions, so a
         // retried/speculative task would double-count.
         val nCrawled = nSelected
 
-        // Pass 2 (5b) — discovery: hosts found in this round's results
-        // re-enter the frontier as depth+1 entries (the parent depth is
-        // the probed entry's own), deduped against everything ever
-        // admitted via THIS round's filter snapshots (so a host that is
-        // both a seed and a discovery is crawled exactly once), written to
-        // a sibling snapshot dir (r${round}d).
+        // 5b. discovery: the hosts stored with this round's results (two
+        // narrow columns of the delta just committed) re-enter the frontier
+        // as depth+1 entries, deduped against everything ever admitted via
+        // THIS round's filter snapshots (so a host that is both a seed and
+        // a discovery is crawled exactly once), written to a sibling
+        // snapshot dir (r${round}d).
         var nDiscovered = 0L
         var discBacklog: Option[Dataset[BacklogRow]] = None
         var discCached: Option[Dataset[FrontierEntry]] = None
         if (discovery.enabled) {
-          val found = spark.createDataset(probed.flatMap { case (e, _, r) =>
-            if (e.depth >= dcfg.maxDepth) Iterator.empty
-            else Engine.discoveredHosts(r, r.domain, dcfg)
-              .iterator.map(h => (h, e.depth + 1))
-          })
+          val found = discoveredRows(resultsT.delta(resultsV, ResultRows.schema))
           val discRefs = timed("filter_refs")(currentFilterRefs(committedRefs, round))
           val discAdmitted = admitUnseenInto(toFrontierDiscovered(found),
             discRefs, filterDir(round) + "d").cache()
@@ -869,8 +846,8 @@ class Engine(
         }
 
         // 6. Remaining MERGE commits: backlog + checkpoint (results
-        // committed by its pass above — commit_results pays the probe +
-        // wide encode + write).
+        // committed above — commit_results pays the probe + wide encode +
+        // write).
         // Backlog rows are narrow; coalesce caps the per-round file count
         // (the 32-core loop once ran SLOWER than 8-core purely on
         // near-empty commit files — 73 vs 47 s/round).
@@ -886,7 +863,6 @@ class Engine(
           case None => backlogUpdates
         }).coalesce(writeParts)))
         discCached.foreach(_.unpersist())
-        if (multiPassUnsafe) probed.unpersist()
         // per-partition throughput: crawled count per frontier partition
         // (pmod(key, P) — the same key the seen-filter shards on)
         val perPartition = sel.perPartition

@@ -23,22 +23,12 @@ import graft.model.Model._
   *  - `geo`, `sourceAddress` and `hstsPreload` are *local* lookups (mmdb,
   *    getsockname, preload list) — they are not guarded by the job
   *    deadline wrapper.
+  *  - Leaves need not be pure: the engine probes each selected domain
+  *    once per round and stores what later stages need (the discovered
+  *    hosts) with the result, so a socket-backed service is called once
+  *    per domain per round, in the batch loop and in the committing streams.
   */
 trait ProbeService extends Serializable {
-  /** Determinism contract: `true` (default) declares every leaf a pure
-    * function of its arguments — same call, same answer, on every
-    * executor, for the lifetime of a run. The engine exploits this by
-    * consuming one round's probe pipeline as two pruned passes (results,
-    * then discovery when it is on), re-executing the cheap probes instead
-    * of caching the expensive wide rows. A real socket-backed service
-    * MUST override this to `false`: a discovering round then persists its
-    * probe output once (`MEMORY_AND_DISK`) so both passes observe the same
-    * responses and no domain is fetched more than once per round
-    * (politeness), at the cost of one wide-row materialization. Without
-    * discovery a round has one pass and persists nothing.
-    */
-  def deterministic: Boolean = true
-
   // ---- DNS leaves (dns_utils.py)
   def ttlFor(domain: String): Int
   def cnameFor(name: String): Option[String]
@@ -85,7 +75,6 @@ trait ProbeService extends Serializable {
   * the leaves you change.
   */
 class ForwardingProbeService(protected val inner: ProbeService) extends ProbeService {
-  override def deterministic: Boolean = inner.deterministic
   def ttlFor(domain: String): Int = inner.ttlFor(domain)
   def cnameFor(name: String): Option[String] = inner.cnameFor(name)
   def aFor(name: String): Seq[String] = inner.aFor(name)
@@ -163,8 +152,6 @@ final class DeadlineProbeService(
     hardLeafTimeouts: Boolean = false,
     leafPool: Option[ExecutorService] = None) extends ProbeService {
   require(budgetNanos > 0, "DeadlineProbeService: budget must be positive")
-
-  override def deterministic: Boolean = inner.deterministic
 
   @volatile private[this] var jobStart: Long = clock.nanos()
 

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.canon.Canon
 import graft.engine.Engine
@@ -74,19 +73,11 @@ object StreamingCrawl {
   }
 
   /** Doc stream → seed frontier entries (depth 0), pre-admission. */
-  def seedEntries(docs: Dataset[Doc], u: Universe): Dataset[FrontierEntry] = {
-    import docs.sparkSession.implicits._
-    Engine.extractSeeds(docs).toDF("domain", "seq")
+  def seedEntries(docs: Dataset[Doc], u: Universe): Dataset[FrontierEntry] =
+    Engine.frontierEntries(u, Engine.extractSeeds(docs).toDF("domain", "seq")
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
       .withColumn("key", xxhash64(col("canonical")))
-      .as[(String, Long, String, Long)]
-      .map { case (domain, seq, canonical, key) =>
-        FrontierEntry(domain, canonical, key,
-          nsBucket = u.nsProvider(canonical),
-          priority = u.ttlFor(canonical),
-          seq = seq)
-      }
-  }
+      .withColumn("depth", lit(0)))
 
   /** Doc stream → admitted, politeness-bounded frontier entries. */
   def frontierStream(docs: Dataset[Doc], u: Universe, partitions: Int,
@@ -116,10 +107,12 @@ object StreamingCrawl {
     * the streaming twin of `Engine.run(discovery = on)`: hosts found in
     * each micro-batch's results (redirect targets, MX hosts, in-content
     * links — the same [[graft.engine.Engine.discoveredHosts]] extraction)
-    * are written as parquet into `discDir`, which is ALSO one of the
-    * stream's sources — so discoveries feed back into the SAME cuckoo
-    * seen-set (`admitStream`) and politeness gate as the seeds, and the
-    * query keeps producing micro-batches until the frontier is exhausted.
+    * are stored with the results, read back from the micro-batch's
+    * committed delta and appended as parquet to `discDir`, which is ALSO
+    * one of the stream's sources — so discoveries feed back into the SAME
+    * cuckoo seen-set (`admitStream`) and politeness gate as the seeds, and
+    * the query keeps producing micro-batches until the frontier is
+    * exhausted.
     *
     * Depth rides the frontier entry: seeds enter at 0, a batch extracts
     * hosts only from results whose entry depth `< dcfg.maxDepth`, and
@@ -135,104 +128,83 @@ object StreamingCrawl {
     * generally).
     */
   def discoveringCrawlIntoTables(docs: Dataset[Doc], u: Universe,
-      cfg: CrawlConfig, dcfg: graft.engine.Engine.DiscoveryConfig,
+      cfg: CrawlConfig, dcfg: Engine.DiscoveryConfig,
       workDir: String, discDir: String, checkpointDir: String,
       partitions: Int, budgetPerBatch: Int => Int,
       filterCapacity: Long = 1L << 18,
       clock: String = "2026-01-01 00:00:00",
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery = {
     val spark = docs.sparkSession
-    import spark.implicits._
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(discDir))
-    val discSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("host",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("depth",
-        org.apache.spark.sql.types.IntegerType)))
+    val discSchema = StructType(Seq(
+      StructField("host", StringType), StructField("depth", IntegerType)))
     // discovered-host stream: same canonicalize→punycode→xxhash64 pipeline
     // and the batch engine's discovery seq range (disjoint from seed seqs)
-    val discEntries = spark.readStream.schema(discSchema).parquet(discDir)
-      .withColumn("canonical", Canon.canonicalizeDomainCol(col("host")))
-      .withColumn("key", xxhash64(col("canonical")))
-      .withColumn("seq", Engine.discoverySeq(col("canonical")))
-      .select(col("host").as("domain"), col("seq"), col("canonical"),
-        col("key"), col("depth"))
-      .as[(String, Long, String, Long, Int)]
-      .map { case (domain, seq, canonical, key, depth) =>
-        FrontierEntry(domain, canonical, key,
-          nsBucket = u.nsProvider(canonical),
-          priority = u.ttlFor(canonical),
-          seq = seq, depth = depth)
-      }
+    val discEntries = Engine.frontierEntries(u,
+      spark.readStream.schema(discSchema).parquet(discDir)
+        .withColumnRenamed("host", "domain")
+        .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
+        .withColumn("key", xxhash64(col("canonical")))
+        .withColumn("seq", Engine.discoverySeq(col("canonical"))))
     val admitted = StreamingFrontier.admitStream(
       seedEntries(docs, u).unionByName(discEntries), partitions, filterCapacity)
-    val results = politeStream(admitted, budgetPerBatch)
-      .mapPartitions { it =>
-        val p = new Probes(u, cfg)
-        it.map(e => (e.depth, p.processDomain(e.canonical, clock)))
-      }
-    results.writeStream
+    commitEach(politeStream(admitted, budgetPerBatch), u, cfg, dcfg, clock,
+      workDir, Some(discDir), checkpointDir, trigger)
+  }
+
+  /** MERGE-commit a streaming crawl into the batch engine's results
+    * table: every micro-batch of `entries` (a politeness-bounded frontier
+    * stream, e.g. [[frontierStream]]) is probed and its results upserted
+    * (keyed by domain) through the same idempotent
+    * [[graft.tables.SnapTable.mergeCommit]] the batch loop uses, under a
+    * Structured-Streaming checkpoint. The combination gives an
+    * effectively-once table: the stream replays an uncommitted
+    * micro-batch after a crash (at-least-once), and the keyed MERGE
+    * absorbs the replay — exactly the batch loop's T8 story. The span view
+    * over it ([[graft.spans.SpanCodec.view]]) is bit-identical to
+    * `Engine.run`'s for the same seed corpus (StreamingCrawlSpec), so
+    * downstream consumers cannot tell which engine produced it.
+    */
+  def commitStream(entries: Dataset[FrontierEntry], u: Universe, cfg: CrawlConfig,
+      workDir: String, checkpointDir: String,
+      clock: String = "2026-01-01 00:00:00",
+      trigger: Trigger = Trigger.ProcessingTime("200 milliseconds")): StreamingQuery =
+    commitEach(entries, u, cfg, Engine.DiscoveryConfig.off, clock, workDir, None,
+      checkpointDir, trigger)
+
+  /** The committing streams' micro-batch: probe each entry once, MERGE-
+    * commit the results (with each entry's depth and discovered hosts)
+    * through the batch engine's pooled wide-row serializers
+    * ([[graft.engine.Engine.WideRows]]), then, with a `discDir`, append the
+    * hosts read back from the committed delta. Emptiness is tested on the
+    * narrow entries, before any probe runs.
+    */
+  private def commitEach(entries: Dataset[FrontierEntry], u: Universe, cfg: CrawlConfig,
+      dcfg: Engine.DiscoveryConfig, clock: String, workDir: String,
+      discDir: Option[String], checkpointDir: String, trigger: Trigger): StreamingQuery =
+    entries.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[(Int, DomainResult)], _: Long) =>
-        val sp = batch.sparkSession
-        import sp.implicits._
+      .foreachBatch { (batch: Dataset[FrontierEntry], _: Long) =>
         if (!batch.isEmpty) {
-          val b = batch.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          try {
-            commitBatch(sp, workDir, b.map(_._2))
-            val hosts = b.flatMap { case (depth, r) =>
-              if (depth >= dcfg.maxDepth) Iterator.empty
-              else Engine.discoveredHosts(r, r.domain, dcfg)
-                .iterator.map(h => (h, depth + 1))
-            }
-            val hs = hosts.collect() // bounded by budget × maxPerDomain
-            if (hs.nonEmpty)
-              sp.createDataset(hs.toSeq).toDF("host", "depth")
-                .coalesce(1).write.mode("append").parquet(discDir)
-          } finally b.unpersist()
+          val spark = batch.sparkSession
+          val results = new SnapTable(spark, s"$workDir/results", Seq("domain"))
+          val v = results.mergeCommit(Engine.StreamResultRows.frame(spark,
+            batch.rdd.mapPartitions { it =>
+              val p = new Probes(u, cfg)
+              it.map { e =>
+                val r = p.processDomain(e.canonical, clock)
+                Engine.StreamResultRow(r.domain, e.depth, dcfg.hostsOf(r, e.depth), r)
+              }
+            }))
+          discDir.foreach { dir =>
+            val hosts = Engine.discoveredRows(results.delta(v, Engine.StreamResultRows.schema))
+            // no empty files: each new file in discDir starts a micro-batch
+            if (!hosts.isEmpty) hosts.coalesce(1).write.mode("append").parquet(dir)
+          }
         }
         ()
       }
       .start()
-  }
-
-  /** MERGE-commit a streaming crawl into the batch engine's results
-    * table: every micro-batch upserts its results (keyed by domain)
-    * through the same idempotent [[graft.tables.SnapTable.mergeCommit]]
-    * the batch loop uses, under a Structured-Streaming checkpoint. The
-    * combination gives an effectively-once table: the stream replays an
-    * uncommitted micro-batch after a crash (at-least-once), and the keyed
-    * MERGE absorbs the replay — exactly the batch loop's T8 story. The
-    * span view over it ([[graft.spans.SpanCodec.view]]) is bit-identical
-    * to `Engine.run`'s for the same seed corpus (StreamingCrawlSpec), so
-    * downstream consumers cannot tell which engine produced it.
-    */
-  def commitStream(results: Dataset[DomainResult], workDir: String,
-      checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime("200 milliseconds"))
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    results.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[DomainResult], _: Long) =>
-        if (!batch.isEmpty) commitBatch(batch.sparkSession, workDir, batch.rdd)
-        ()
-      }
-      .start()
-  }
-
-  /** One micro-batch's MERGE commit of its results through the batch
-    * engine's pooled wide-row serializers ([[graft.engine.Engine.WideRows]]).
-    */
-  private def commitBatch(spark: SparkSession, workDir: String,
-      results: RDD[DomainResult]): Unit =
-    new SnapTable(spark, s"$workDir/results", Seq("domain"))
-      .mergeCommit(Engine.StreamResultRows.frame(spark,
-        results.map(r => Engine.StreamResultRow(r.domain, r))))
 }

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-shaped table layer: Parquet data files + JSON snapshot manifests
   * with atomic commits and MERGE-style upsert semantics.
@@ -76,10 +77,11 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     val v = asOfVersion.orElse(currentVersion).getOrElse(return None)
     val dirs = manifest(v)
     if (dirs.isEmpty) return None
+    // deltas written before a column was added lack it: it reads as null
     val union = dirs.map { d =>
       spark.read.parquet(rootP.resolve(d).toString)
         .withColumn("_commit_version", lit(d.stripPrefix("data/v").toInt))
-    }.reduce(_ unionByName _)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
     val resolved = if (keyCols.isEmpty) union else {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(col("_commit_version").desc)
@@ -87,6 +89,13 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     }
     Some(resolved.drop("_commit_version"))
   }
+
+  /** One commit's rows as written, without MERGE resolution: the
+    * `data/v{v}` directory that `mergeCommit` returned `v` for, read with
+    * `schema` (an empty delta then needs no file footer to plan).
+    */
+  def delta(v: Int, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(rootP.resolve(s"data/v$v").toString)
 
   def exists: Boolean = currentVersion.isDefined
 

@@ -19,7 +19,7 @@ import java.util.Base64
   *    reports signed/bogus, replaces the DNSKEY/RRSIG leaves with a REAL
   *    RSA-2048 public key (RFC 4034 algorithm 8, RSASHA256) and a REAL
   *    SHA256withRSA signature. RSA signatures are deterministic (PKCS#1
-  *    v1.5), so the probe-leaf determinism contract holds; "bogus" zones
+  *    v1.5), so repeated crawls produce identical documents; "bogus" zones
   *    sign corrupted bytes, so their signature is present but
   *    cryptographically invalid — exactly the reference's
   *    SERVFAIL-on-validation-failure shape.
@@ -48,8 +48,8 @@ object DnssecCrypto {
     * counter stream and assembled via `RSAPrivateCrtKeySpec`, not by
     * provider keygen (whose prime search is JDK-implementation/version
     * dependent). Heterogeneous-JDK clusters therefore derive identical
-    * DNSKEY/RRSIG leaves on every executor, keeping the multi-pass probe
-    * determinism contract honest. One derivation per (JVM, seed), cached.
+    * DNSKEY/RRSIG leaves on every executor, so the result digests do not
+    * depend on where a domain was probed. One derivation per (JVM, seed), cached.
     */
   private val kpCache = new java.util.concurrent.ConcurrentHashMap[Long, KeyPair]()
   def keyPair(seed: Long): KeyPair = kpCache.computeIfAbsent(seed, s => {

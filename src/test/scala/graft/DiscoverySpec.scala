@@ -155,7 +155,10 @@ class DiscoverySpec extends AnyFunSuite {
   // Seed chunks of 20 make round 2 admit fresh seeds, so a run resumed after
   // round 1 reads round 1's committed filter snapshots: as written
   // ("current"), or rewritten into the headerless dense layout of work dirs
-  // written before snapshots were sized by occupancy ("legacy").
+  // written before snapshots were sized by occupancy ("legacy"). With
+  // "legacy-results" the snapshots stay as written and round 1's results
+  // delta is rewritten without the `depth` and `discovered` columns, as
+  // work dirs written before results stored discovered hosts hold it.
   private def resumeRun(dir: String, resumeLayout: Option[String]): Seq[(String, Int, Long)] = {
     val svc = new LinkPlantingService(u)
     val mk = () => new Engine(spark, u, cfg = contentCfg, workDir = dir,
@@ -173,6 +176,15 @@ class DiscoverySpec extends AnyFunSuite {
         val filter = graft.frontier.CuckooFilter.deserialize(Files.readAllBytes(f))
         Files.write(f, graft.frontier.CuckooSnapshots.legacyBytes(filter))
       }
+      if (layout == "legacy-results") {
+        val v1 = java.nio.file.Paths.get(dir, "results", "data", "v1")
+        val rewritten = java.nio.file.Paths.get(dir, "results-v1-without-hosts")
+        spark.read.parquet(v1.toString).drop("depth", "discovered")
+          .write.parquet(rewritten.toString)
+        Files.move(v1, java.nio.file.Paths.get(dir, "results-v1-as-written"))
+        Files.move(rewritten, v1)
+        assert(!spark.read.parquet(v1.toString).columns.contains("discovered"))
+      }
     }
     mk().run(seedDocs(40))
     new Engine(spark, u, workDir = dir, frontierPartitions = 8)
@@ -180,7 +192,18 @@ class DiscoverySpec extends AnyFunSuite {
       .as[(String, Int, Long)].collect().sortBy(r => (r._2, r._3)).toSeq
   }
 
-  private lazy val uninterrupted = resumeRun(graft.TmpDirs.create("disc-full").toString, None)
+  private lazy val fullDir = graft.TmpDirs.create("disc-full").toString
+  private lazy val uninterrupted = resumeRun(fullDir, None)
+
+  /** The span view over the results table under `dir`, one JSON document
+    * per row, sorted.
+    */
+  private def spanDocs(dir: String): Seq[String] =
+    graft.spans.SpanCodec.view(new Engine(spark, u, workDir = dir, frontierPartitions = 8)
+      .resultsTable.read().get)
+      .select(org.apache.spark.sql.functions.to_json(
+        org.apache.spark.sql.functions.struct(org.apache.spark.sql.functions.col("*"))))
+      .as[String].collect().sorted.toSeq
 
   test("discovery resume: stop after round 1, resume in a new engine — bit-identical to an uninterrupted run") {
     assert(uninterrupted.map(_._1).contains("planted-link.cz"))
@@ -191,6 +214,14 @@ class DiscoverySpec extends AnyFunSuite {
   test("discovery resume from legacy-layout filter snapshots matches an uninterrupted run") {
     val resumed = resumeRun(graft.TmpDirs.create("disc-legacy-res").toString, Some("legacy"))
     assert(resumed == uninterrupted)
+  }
+
+  test("discovery resume over a results delta written without discovered hosts matches an uninterrupted run") {
+    val dir = graft.TmpDirs.create("disc-oldresults-res").toString
+    // resumeRun reads the whole results table back: the old delta unions
+    // with the new ones
+    assert(resumeRun(dir, Some("legacy-results")) == uninterrupted)
+    assert(spanDocs(dir) == spanDocs(fullDir))
   }
 
   test("crash-mid-round resume: stale uncommitted filter snapshots are dropped, discovered hosts are not lost") {

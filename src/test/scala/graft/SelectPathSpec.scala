@@ -18,12 +18,10 @@ import graft.universe.Universe
 /** Per-probe call counter through the ProbeService seam. `dnssecState` is
   * called exactly once per `getDnsLocal`, i.e. once per crawled domain per
   * pipeline pass — the cleanest observable for how many times the engine
-  * re-executes the probe pipeline. Local-mode executors share the JVM, so
+  * runs the probe pipeline. Local-mode executors share the JVM, so
   * a companion-object map sees every task's calls.
   */
-class CountingProbeService(u: Universe, id: String, det: Boolean)
-    extends ForwardingProbeService(u) {
-  override def deterministic: Boolean = det
+class CountingProbeService(u: Universe, id: String) extends ForwardingProbeService(u) {
   override def dnssecState(domain: String): String = {
     CountingProbeService.bump(id, domain)
     super.dnssecState(domain)
@@ -155,34 +153,30 @@ class SelectPathSpec extends AnyFunSuite {
   }
 
   // runs a 40-domain crawl against a counting service and checks that
-  // every crawled domain was probed exactly perDomain times
-  private def assertProbesPerDomain(det: Boolean, disc: Boolean, perDomain: Long): Unit = {
-    val id = s"probes-$det-$disc-" + System.nanoTime()
-    val svc = new CountingProbeService(u, id, det)
+  // every crawled domain was probed exactly once
+  private def assertOneProbePerDomain(disc: Boolean): Unit = {
+    val id = s"probes-$disc-" + System.nanoTime()
+    val svc = new CountingProbeService(u, id)
     val eng = new Engine(spark, u, cfg = contentCfg,
       workDir = graft.TmpDirs.create("selpath-probes").toString,
       frontierPartitions = 8, probeService = svc,
       discovery = if (disc) Engine.DiscoveryConfig.on.copy(maxDepth = 1)
         else Engine.DiscoveryConfig.off)
-    eng.run(seedDocs(40))
+    val stats = eng.run(seedDocs(40))
+    if (disc) assert(stats.exists(_.discovered > 0), s"no discoveries in $stats")
     val counts = CountingProbeService.countsFor(id)
     val crawled = eng.resultsTable.read().get.select("domain").as[String].collect().toSet
-    assert(counts.keySet == crawled, s"deterministic=$det discovery=$disc")
-    val off = counts.filter(_._2 != perDomain)
-    assert(off.isEmpty, s"deterministic=$det discovery=$disc: expected $perDomain " +
-      s"probes per domain; ${off.size} domains got ${off.values.toSet.mkString("/")}")
+    assert(counts.keySet == crawled, s"discovery=$disc")
+    val off = counts.filter(_._2 != 1L)
+    assert(off.isEmpty, s"discovery=$disc: expected 1 probe per domain; " +
+      s"${off.size} domains got ${off.values.toSet.mkString("/")}")
   }
 
-  test("non-deterministic probe service: each domain is probed exactly once per round (results persisted, passes share them)") {
-    assertProbesPerDomain(det = false, disc = true, perDomain = 1L)
+  test("each selected domain is probed exactly once per round, discovery on") {
+    assertOneProbePerDomain(disc = true)
   }
 
-  test("deterministic probe service (the default): passes re-execute the cheap probes instead of caching wide rows") {
-    // one probe for the results pass, one for the discovery pass
-    assertProbesPerDomain(det = true, disc = true, perDomain = 2L)
-  }
-
-  test("deterministic probe service, discovery off: one probe per domain") {
-    assertProbesPerDomain(det = true, disc = false, perDomain = 1L)
+  test("each selected domain is probed exactly once per round, discovery off") {
+    assertOneProbePerDomain(disc = false)
   }
 }

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Model.{Doc, DomainResult, Span}
@@ -16,6 +17,18 @@ import graft.universe.Universe
 /** One nameserver bucket so the per-batch token budget is observable. */
 class OneBucketUniverse(seed: Long) extends Universe(seed) {
   override def nsProvider(domain: String): Int = 0
+}
+
+/** [[OneBucketUniverse]] that counts its `hstsPreload` calls per domain.
+  * [[Probes.processDomain]] makes exactly one per domain, and the universe
+  * never calls it itself (it does call `dnssecState`, from `dsFor` and
+  * `dnskeyFor`), so the count is how many times a domain was probed.
+  */
+class CountingUniverse(id: String) extends OneBucketUniverse(42L) {
+  override def hstsPreload(domain: String): Boolean = {
+    CountingProbeService.bump(id, domain)
+    super.hstsPreload(domain)
+  }
 }
 
 class StreamingCrawlSpec extends AnyFunSuite {
@@ -157,13 +170,13 @@ class StreamingCrawlSpec extends AnyFunSuite {
     eng.run(spark.createDataset(docs))
     val batchSpans = spanRows(batchDir)
 
-    // streaming: same docs through crawlStream + commitStream
+    // streaming: same docs through frontierStream + commitStream
     val streamDir = graft.TmpDirs.create("parity-stream").toString
     val ckpt = graft.TmpDirs.create("parity-ckpt").toString
     val input = MemoryStream[Doc]
-    val results = StreamingCrawl.crawlStream(input.toDS(), u, CrawlConfig(),
+    val entries = StreamingCrawl.frontierStream(input.toDS(), u,
       partitions = 4, budgetPerBatch = _ => 100)
-    val q = StreamingCrawl.commitStream(results, streamDir, ckpt)
+    val q = StreamingCrawl.commitStream(entries, u, CrawlConfig(), streamDir, ckpt)
     try {
       input.addData(docs: _*)
       val resultsT = new SnapTable(spark, s"$streamDir/results", Seq("domain"))
@@ -229,5 +242,53 @@ class StreamingCrawlSpec extends AnyFunSuite {
       assert(spanRows(streamDir) == batchSpans,
         "streaming discovering span view diverges from the batch engine's")
     } finally q.stop()
+  }
+
+  test("every streamed domain is probed exactly once, committing and discovering streams") {
+    implicit val sqlCtx = spark.sqlContext
+    val docs = (0 until 12).map(i => doc(f"doc-$i%03d", s"shop$i.cz"))
+    val dcfg = graft.engine.Engine.DiscoveryConfig.on.copy(maxDepth = 1)
+    // the discovering stream crawls the batch engine's set (parity case above)
+    val eng = new graft.engine.Engine(spark, u,
+      workDir = graft.TmpDirs.create("once-batch").toString,
+      frontierPartitions = 4, discovery = dcfg)
+    eng.run(spark.createDataset(docs))
+    val discovered = eng.resultsTable.read().get.select("domain").as[String].collect().toSet
+    assert(discovered.size > docs.size, "expected discoveries beyond the seeds")
+
+    def probedOnce(name: String, expected: Set[String])(
+        start: (Dataset[Doc], Universe, String, String) => StreamingQuery): Unit = {
+      val id = s"stream-once-$name-" + System.nanoTime()
+      val dir = graft.TmpDirs.create(s"once-$name").toString
+      val input = MemoryStream[Doc]
+      val q = start(input.toDS(), new CountingUniverse(id), dir,
+        graft.TmpDirs.create(s"once-$name-ckpt").toString)
+      try {
+        input.addData(docs: _*)
+        val resultsT = new SnapTable(spark, s"$dir/results", Seq("domain"))
+        def committed: Set[String] = resultsT.read()
+          .map(_.select("domain").as[String].collect().toSet).getOrElse(Set.empty)
+        val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
+        while (committed != expected && System.nanoTime() < deadline) {
+          q.exception.foreach(throw _)
+          Thread.sleep(300)
+        }
+        assert(committed == expected, s"$name: committed set diverges")
+      } finally q.stop()
+      val counts = CountingProbeService.countsFor(id)
+      assert(counts.keySet == expected, s"$name: probed set diverges")
+      val off = counts.filter(_._2 != 1L)
+      assert(off.isEmpty, s"$name: expected 1 probe per domain; ${off.size} domains " +
+        s"got ${off.values.toSet.mkString("/")}")
+    }
+
+    probedOnce("commit", docs.flatMap(_.spans.map(_.text)).toSet) { (ds, cu, dir, ckpt) =>
+      StreamingCrawl.commitStream(StreamingCrawl.frontierStream(ds, cu, partitions = 4,
+        budgetPerBatch = _ => 100), cu, CrawlConfig(), dir, ckpt)
+    }
+    probedOnce("discover", discovered) { (ds, cu, dir, ckpt) =>
+      StreamingCrawl.discoveringCrawlIntoTables(ds, cu, CrawlConfig(), dcfg, dir,
+        dir + "/disc", ckpt, partitions = 4, budgetPerBatch = _ => 100)
+    }
   }
 }
