@@ -34,14 +34,30 @@ object Canon {
   /** Pure canonicalizer. Null-safe at the expression layer, not here.
     * Invalid IDNA input falls back to the lowercased form rather than
     * failing the row (a crawler must never die on one bad seed).
+    *
+    * Only a name with a non-ASCII character reaches IDN: `IDN.toASCII`
+    * returns an all-ASCII name unchanged (its labels skip nameprep and
+    * punycode; an empty or over-63-character label throws, which falls
+    * back to the same string), so the fast path is exact.
     */
   def canonicalize(raw: String): String = {
     var s = raw.trim.toLowerCase(java.util.Locale.ROOT)
     if (s.endsWith(".") && s.length > 1) s = s.substring(0, s.length - 1)
-    if (s.isEmpty) s
-    else
-      try IDN.toASCII(s, IDN.ALLOW_UNASSIGNED)
-      catch { case _: IllegalArgumentException => s }
+    if (isAscii(s)) s else idnToAscii(s)
+  }
+
+  /** The IDNA step of [[canonicalize]], for names with a non-ASCII character. */
+  private[graft] def idnToAscii(s: String): String =
+    try IDN.toASCII(s, IDN.ALLOW_UNASSIGNED)
+    catch { case _: IllegalArgumentException => s }
+
+  private def isAscii(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      if (s.charAt(i) >= 0x80) return false
+      i += 1
+    }
+    true
   }
 
   /** UTF8String bridge used from generated code (static call target). */

@@ -234,14 +234,112 @@ object Engine {
     */
   def frontierEntries(u: Universe, rows: DataFrame): Dataset[FrontierEntry] = {
     import rows.sparkSession.implicits._
-    rows.select("domain", "canonical", "key", "seq", "depth")
-      .as[(String, String, Long, Long, Int)]
-      .map { case (domain, canonical, key, seq, depth) =>
-        FrontierEntry(domain, canonical, key,
-          nsBucket = u.nsProvider(canonical),
-          priority = u.ttlFor(canonical), // TTL-derived priority
-          seq = seq, depth = depth)
+    rows.select("domain", "canonical", "key", "seq", "depth").as[FrontierRow]
+      .map(entryOf(u, _))
+  }
+
+  /** A frontier candidate before its scheduling attributes. */
+  case class FrontierRow(domain: String, canonical: String, key: Long, seq: Long, depth: Int)
+
+  /** The one entry builder: `r` with its nameserver bucket and TTL
+    * priority from `u`.
+    */
+  private def entryOf(u: Universe, r: FrontierRow): FrontierEntry =
+    FrontierEntry(r.domain, r.canonical, r.key,
+      nsBucket = u.nsProvider(r.canonical),
+      priority = u.ttlFor(r.canonical), // TTL-derived priority
+      seq = r.seq, depth = r.depth)
+
+  /** One frontier row per canonical, first enqueue winning (D1): the min
+    * `(seq, domain)` row, `domain` in UTF-8 byte order (Spark's string
+    * order), with the min depth over all of the canonical's rows. Null
+    * canonicals are one group. Holds the distinct canonicals of `rows`,
+    * so callers feed it one filter partition at a time.
+    */
+  private def firstEnqueued(rows: Iterator[FrontierRow]): Iterator[FrontierRow] = {
+    val best = new java.util.HashMap[String, FrontierRow]()
+    rows.foreach { r =>
+      val w = best.get(r.canonical)
+      if (w == null) best.put(r.canonical, r)
+      else {
+        val first = r.seq < w.seq || (r.seq == w.seq && utf8Order(r.domain, w.domain) < 0)
+        if (first || r.depth < w.depth)
+          best.put(r.canonical, if (first) r.copy(depth = math.min(r.depth, w.depth))
+            else w.copy(depth = r.depth))
       }
+    }
+    import scala.jdk.CollectionConverters._
+    best.values.iterator.asScala
+  }
+
+  /** `String` comparison in code-point order, which is UTF-8 byte order;
+    * `compareTo` orders by UTF-16 unit and so puts a surrogate pair below
+    * a BMP character in U+E000..U+FFFF. Null sorts first, as in Spark.
+    */
+  private[graft] def utf8Order(a: String, b: String): Int =
+    if (a == null || b == null) (if (a == null) 0 else 1) - (if (b == null) 0 else 1)
+    else {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) a.length - b.length
+      else {
+        val (x, y) = (a.charAt(i), b.charAt(i))
+        // surrogates (U+D800..U+DFFF) move above U+E000..U+FFFF
+        def rank(c: Char): Int =
+          if (c < 0xd800) c else if (c < 0xe000) c + 0x2000 else c - 0x800
+        rank(x) - rank(y)
+      }
+    }
+
+  /** One filter partition's seen-set admission within a task: the
+    * partition's filter (its committed snapshot, or empty) checks and
+    * updates each entry ([[CuckooFilter.admit]]), and the updated filter
+    * is published to `ref` once. The filter is dropped when published, so
+    * a task that runs several filter partitions holds one at a time.
+    *
+    * Snapshot discipline: write to a per-attempt temp file, then an atomic
+    * rename — a speculative or retried task racing a sibling can never
+    * leave a torn file (each attempt publishes a complete file; last
+    * rename wins). The write fires on full drain AND on task completion
+    * (backstop), so a consumer that stops early (limit/take, AQE
+    * early-out) still records the keys it actually admitted; a failed
+    * attempt's write is harmless because a round's refs are only committed
+    * after the round succeeds.
+    */
+  private final class SeenShard(idx: Int, committed: Option[String], capacity: Long,
+      ref: String) {
+    private var filter = committed match {
+      case Some(f) => CuckooFilter.deserialize(Files.readAllBytes(Paths.get(f)))
+      case None => CuckooFilter.create(capacity)
+    }
+    private val ctx = TaskContext.get()
+    if (ctx != null) ctx.addTaskCompletionListener[Unit](_ => publish())
+
+    private def publish(): Unit = if (filter != null) {
+      val attempt = if (ctx != null) ctx.taskAttemptId() else System.nanoTime()
+      val tmp = Paths.get(s"$ref.a$attempt.tmp")
+      Files.write(tmp, filter.serialize())
+      filter = null
+      Files.move(tmp, Paths.get(ref),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+
+    /** The entries the filter has not seen, streamed: the partition's
+      * fresh entries are never materialized.
+      */
+    def admit(entries: Iterator[FrontierEntry]): Iterator[FrontierEntry] = {
+      val fresh = entries.filter(e => filter.admit(e.key, idx))
+      new Iterator[FrontierEntry] {
+        def hasNext: Boolean = {
+          val h = fresh.hasNext
+          if (!h) publish() // full drain: publish without waiting for task end
+          h
+        }
+        def next(): FrontierEntry = fresh.next()
+      }
+    }
   }
 
   /** `(host, depth)` frontier candidates of committed result rows: each
@@ -357,31 +455,52 @@ class Engine(
   // ------------------------------------------------------------ seeds
 
   /** Canonicalize → punycode → xxHash64 → first-enqueue dedup (D1: RQ
-    * job_id = domain; first occurrence wins) → scheduling attributes.
+    * job_id = domain; the min-seq variant wins) → scheduling attributes.
     */
   def toFrontier(seeds: Dataset[(String, Long)]): Dataset[FrontierEntry] =
-    // first-enqueue-wins dedup as a hash aggregate with map-side partial
-    // combine (cheaper than a sort-window; same semantics: min seq wins)
-    frontierEntries(universe, seeds.toDF("domain", "seq")
+    dedupFrontier(seeds.toDF("domain", "seq")
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
-      .groupBy(col("canonical"))
-      .agg(min_by(col("domain"), struct(col("seq"), col("domain"))).as("domain"),
-        min(col("seq")).as("seq"))
-      .withColumn("key", xxhash64(col("canonical")))
       .withColumn("depth", lit(0)))
 
-  /** Discovered `(host, depth)` rows → frontier entries. Twin of
-    * [[toFrontier]] with two differences: the dedup keeps the MIN depth
+  /** Discovered `(host, depth)` rows → frontier entries, by the same dedup
+    * as [[toFrontier]]: every row of a canonical has its seq
+    * ([[Engine.discoverySeq]]), so the min domain wins, and the min depth
     * (two parents at different depths → the shallower wins, so the depth
-    * cap is never pessimistic), and seq is [[Engine.discoverySeq]].
+    * cap is never pessimistic).
     */
-  private def toFrontierDiscovered(hosts: DataFrame): Dataset[FrontierEntry] =
-    frontierEntries(universe, hosts.toDF("domain", "depth")
+  private[graft] def toFrontierDiscovered(hosts: DataFrame): Dataset[FrontierEntry] =
+    dedupFrontier(hosts.toDF("domain", "depth")
       .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
-      .groupBy(col("canonical"))
-      .agg(min(col("domain")).as("domain"), min(col("depth")).as("depth"))
-      .withColumn("key", xxhash64(col("canonical")))
       .withColumn("seq", discoverySeq(col("canonical"))))
+
+  /** Rows with `domain`, `canonical`, `seq` and `depth` → one entry per
+    * canonical ([[Engine.firstEnqueued]]), with no sort: the rows shuffle
+    * straight to their filter partition (`pmod(key, P)`) and each is
+    * deduped by a hash map. The coalesce keeps the session's task count
+    * for whatever reads the entries; a task runs its filter partitions one
+    * after another, so it holds one partition's distinct canonicals at a
+    * time.
+    */
+  private def dedupFrontier(rows: DataFrame): Dataset[FrontierEntry] = {
+    val u = universe
+    byFilterPartition(rows.withColumn("key", xxhash64(col("canonical"))))
+      .select("domain", "canonical", "key", "seq", "depth").as[FrontierRow]
+      .mapPartitions(it => firstEnqueued(it).map(entryOf(u, _)))
+      .coalesce(sessionTasks)
+  }
+
+  /** `rows` shuffled so that Spark partition `i` is filter partition `i`:
+    * the rows whose `pmod(key, P)` is `i`.
+    */
+  private def byFilterPartition[T](rows: Dataset[T]): Dataset[T] =
+    rows.repartitionById(frontierPartitions,
+      pmod(col("key"), lit(frontierPartitions.toLong)).cast("int"))
+
+  /** The session's shuffle partition count: the task count that the
+    * admission front end coalesces to, and the unit of the salt and probe
+    * layout sizes.
+    */
+  private def sessionTasks: Int = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   // -------------------------------------------------- seen-set filters
 
@@ -417,6 +536,10 @@ class Engine(
     * the discovery pass re-admits against THIS round's seed snapshots
     * (not the last committed checkpoint) and writes to a sibling dir so
     * the two admissions of one round never clobber each other's files.
+    *
+    * Each Spark partition of the shuffle is one filter partition; its id
+    * comes from the rows' key, since after the coalesce a task's index
+    * names no partition. An empty partition loads and publishes nothing.
     */
   private def admitUnseenInto(entries: Dataset[FrontierEntry],
       refs: Map[Int, String], outDir: String): Dataset[FrontierEntry] = {
@@ -424,57 +547,16 @@ class Engine(
     val p = frontierPartitions
     val cap = filterCapacityPerPartition
     Files.createDirectories(Paths.get(outDir))
-    entries
-      .groupByKey(e => Math.floorMod(e.key, p.toLong).toInt)
-      .flatMapGroups { (idx, it) =>
-        val seen = refsB.value.get(idx) match {
-          case Some(ref) => CuckooFilter.deserialize(Files.readAllBytes(Paths.get(ref)))
-          case None => CuckooFilter.create(cap)
-        }
-        // streamed probe+insert: never materializes the partition's fresh
-        // entries (a Vector here would be the first OOM at 10^10-entry
-        // design scale); the snapshot is written once the iterator drains
-        val fresh = it.filter { e =>
-          if (seen.contains(e.key)) false
-          else {
-            if (!seen.insert(e.key))
-              throw new IllegalStateException(
-                s"seen-filter $idx saturated — size for the frontier")
-            true
-          }
-        }
-        val ref = s"$outDir/part$idx.bin"
-        // Snapshot discipline: write to a per-attempt temp file, then an
-        // atomic rename — a speculative or retried task racing a sibling
-        // can never leave a torn part$idx.bin (each attempt publishes a
-        // complete file; last rename wins). The write fires on full drain
-        // AND on task completion (backstop), so a consumer that stops
-        // early (limit/take, AQE early-out) still records the keys it
-        // actually admitted; a failed attempt's write is harmless because
-        // this round's refs are only committed after the round succeeds.
-        val ctx = org.apache.spark.TaskContext.get()
-        var snapped = false
-        // function value, not a nested def: a def would compile to an
-        // Engine method and pull `this` into the task closure
-        val snapshot: () => Unit = () => if (!snapped) {
-          snapped = true
-          val attempt = if (ctx != null) ctx.taskAttemptId() else System.nanoTime()
-          val tmp = Paths.get(s"$ref.a$attempt.tmp")
-          Files.write(tmp, seen.serialize())
-          Files.move(tmp, Paths.get(ref),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        }
-        if (ctx != null) ctx.addTaskCompletionListener[Unit](_ => snapshot())
-        new Iterator[FrontierEntry] {
-          def hasNext: Boolean = {
-            val h = fresh.hasNext
-            if (!h) snapshot() // full drain: publish without waiting for task end
-            h
-          }
-          def next(): FrontierEntry = fresh.next()
+    byFilterPartition(entries)
+      .mapPartitions { it =>
+        val rows = it.buffered
+        if (!rows.hasNext) rows
+        else {
+          val idx = Math.floorMod(rows.head.key, p.toLong).toInt
+          new SeenShard(idx, refsB.value.get(idx), cap, s"$outDir/part$idx.bin").admit(rows)
         }
       }
+      .coalesce(sessionTasks)
   }
 
   /** Crash-mid-round hygiene: delete filter snapshot dirs of every round
@@ -544,8 +626,8 @@ class Engine(
     * adapts.
     */
   private def saltOf(n: Column, total: Column): Column = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    greatest(lit(1L), ceil(n / greatest(lit(1L), floor(total / lit(parts))))).cast("int")
+    greatest(lit(1L), ceil(n / greatest(lit(1L), floor(total / lit(sessionTasks.toLong)))))
+      .cast("int")
   }
 
   /** One round's selection: the entries popped this round, each with its
@@ -712,7 +794,7 @@ class Engine(
     // disproportionate per-file costs (a 1628-leaf-column footer with
     // per-column stats is ~hundreds of KB regardless of row count)
     val rowsPerTask = 2000L
-    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val shuffleParts = sessionTasks
     val maxParts = shuffleParts * tasksPerCore
     val probeParts = sizeHint match {
       case Some(n) =>

@@ -91,11 +91,10 @@ final class CuckooFilter private (
     false
   }
 
-  def contains(key: Long): Boolean = {
-    val fp = fingerprint(key)
-    val b1 = bucket1(key)
+  def contains(key: Long): Boolean = holds(bucket1(key), fingerprint(key))
+
+  private def holds(b1: Int, fp: Short): Boolean =
     slotContains(b1, fp) || slotContains(bucket2(b1, fp), fp) || stashContains(b1, fp)
-  }
 
   /** Insert. Membership is ALWAYS recorded (evicted victims land in the
     * stash, never dropped). Returns false only when the stash has grown
@@ -104,8 +103,26 @@ final class CuckooFilter private (
   def insert(key: Long): Boolean = {
     val fp = fingerprint(key)
     val b1 = bucket1(key)
-    if (slotContains(b1, fp) || slotContains(bucket2(b1, fp), fp) || stashContains(b1, fp))
-      return true // idempotent
+    holds(b1, fp) || place(key, b1, fp) // idempotent
+  }
+
+  /** Seen-set admission of one key, the one probe/insert step of every
+    * admission path (batch and stream): false when the filter already
+    * holds the key (or a fingerprint twin of it), else the key is inserted
+    * and admitted. An insert past the stash bound fails the task: dedup
+    * must never degrade silently. `partition` names the filter.
+    */
+  def admit(key: Long, partition: Int): Boolean = {
+    val fp = fingerprint(key)
+    val b1 = bucket1(key)
+    if (holds(b1, fp)) false
+    else if (place(key, b1, fp)) true
+    else throw new IllegalStateException(
+      s"seen-filter $partition saturated — raise the filter capacity or the partition count")
+  }
+
+  /** Records an absent key; false when the stash has grown past StashWarn. */
+  private def place(key: Long, b1: Int, fp: Short): Boolean = {
     count += 1
     if (slotInsert(b1, fp)) return true
     val b2 = bucket2(b1, fp)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.canon.Canon
 import graft.engine.Engine
@@ -178,6 +179,11 @@ object StreamingCrawl {
     * ([[graft.engine.Engine.WideRows]]), then, with a `discDir`, append the
     * hosts read back from the committed delta. Emptiness is tested on the
     * narrow entries, before any probe runs.
+    *
+    * The entries are cached: the emptiness test and the probe pass are two
+    * jobs over the micro-batch, and without the cache the second would run
+    * the stateful stage that emits the entries (politeness, loading and
+    * committing its state store) a second time.
     */
   private def commitEach(entries: Dataset[FrontierEntry], u: Universe, cfg: CrawlConfig,
       dcfg: Engine.DiscoveryConfig, clock: String, workDir: String,
@@ -187,11 +193,12 @@ object StreamingCrawl {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[FrontierEntry], _: Long) =>
-        if (!batch.isEmpty) {
+        val rows = batch.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        try if (!rows.isEmpty()) {
           val spark = batch.sparkSession
           val results = new SnapTable(spark, s"$workDir/results", Seq("domain"))
           val v = results.mergeCommit(Engine.StreamResultRows.frame(spark,
-            batch.rdd.mapPartitions { it =>
+            rows.mapPartitions { it =>
               val p = new Probes(u, cfg)
               it.map { e =>
                 val r = p.processDomain(e.canonical, clock)
@@ -203,7 +210,7 @@ object StreamingCrawl {
             // no empty files: each new file in discDir starts a micro-batch
             if (!hosts.isEmpty) hosts.coalesce(1).write.mode("append").parquet(dir)
           }
-        }
+        } finally rows.unpersist(blocking = false)
         ()
       }
       .start()

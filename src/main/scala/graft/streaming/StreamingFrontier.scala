@@ -35,7 +35,7 @@ object StreamingFrontier {
     entries
       .groupByKey(e => Math.floorMod(e.key, partitions.toLong).toInt)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: Int, it: Iterator[FrontierEntry], state: GroupState[SeenState]) =>
+        (partition: Int, it: Iterator[FrontierEntry], state: GroupState[SeenState]) =>
           if (state.hasTimedOut) { // politeness-cache expiry: forget and stop
             state.remove()
             Iterator.empty
@@ -43,19 +43,9 @@ object StreamingFrontier {
             val filter = state.getOption
               .map(s => CuckooFilter.deserialize(s.filterBytes))
               .getOrElse(CuckooFilter.create(filterCapacity))
-            // check-and-insert per element: intra-batch duplicates must
-            // also collapse (first occurrence wins, D1). A false insert
-            // means the stash overflowed — fail loudly rather than let
-            // dedup degrade silently (same contract as Engine.admitUnseen)
-            val fresh = it.flatMap { e =>
-              if (filter.contains(e.key)) None
-              else {
-                if (!filter.insert(e.key))
-                  throw new IllegalStateException(
-                    "seen-filter stash overflow — raise filterCapacity or partitions")
-                Some(e)
-              }
-            }.toVector
+            // check-and-insert per element, the batch engine's step:
+            // intra-batch duplicates also collapse (first occurrence wins, D1)
+            val fresh = it.filter(e => filter.admit(e.key, partition)).toVector
             val admitted = state.getOption.map(_.admitted).getOrElse(0L) + fresh.size
             state.update(SeenState(filter.serialize(), admitted))
             ttl.foreach(state.setTimeoutDuration)

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.canon.Canon
@@ -24,6 +25,49 @@ class CanonSpec extends AnyFunSuite {
   test("ascii domains are idempotent; garbage does not throw") {
     assert(Canon.canonicalize("nic.cz") == "nic.cz")
     assert(Canon.canonicalize("a b c") == Canon.canonicalize("a b c")) // stable
+  }
+
+  /** `raw` trimmed, lowercased and stripped of one trailing dot: the input
+    * of the IDN step.
+    */
+  private def prepared(raw: String): String = {
+    val s = raw.trim.toLowerCase(java.util.Locale.ROOT)
+    if (s.endsWith(".") && s.length > 1) s.dropRight(1) else s
+  }
+
+  private def check(prop: Prop): Unit = {
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(2000), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  private def name(label: Gen[String]): Gen[String] = for {
+    labels <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, label))
+    dot <- Gen.oneOf("", ".", "..")
+    pad <- Gen.oneOf("", " ", "\t")
+  } yield pad + labels.mkString(".") + dot + pad
+
+  private val asciiLabel: Gen[String] = Gen.frequency(
+    4 -> Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.oneOf('-', '_', 'A', 'Z'))).map(_.mkString),
+    1 -> Gen.const(""), // empty label
+    1 -> Gen.choose(64, 90).flatMap(Gen.listOfN(_, Gen.alphaLowerChar)).map(_.mkString),
+    1 -> Gen.alphaNumStr.map("xn--" + _),
+    1 -> Gen.listOf(Gen.choose('\u0000', '\u007f')).map(_.mkString)) // control chars too
+
+  test("property: on ASCII names the fast path equals the IDN path") {
+    check(Prop.forAll(name(asciiLabel)) { raw =>
+      val p = prepared(raw)
+      Canon.canonicalize(raw) == p && Canon.idnToAscii(p) == p
+    })
+  }
+
+  test("property: names with a non-ASCII character still go through IDN") {
+    val label = Gen.listOf(Gen.oneOf(Gen.alphaLowerChar, Gen.oneOf('á', 'Č', 'ß', 'ž', '\u3002',
+      '\u0130', '\u212a'))).map(_.mkString)
+    check(Prop.forAll(name(label).suchThat(_.exists(_ >= '\u0080'))) { raw =>
+      Canon.canonicalize(raw) == Canon.idnToAscii(prepared(raw))
+    })
+    // the IDN step is not a no-op on such names
+    assert(Canon.canonicalize("Háčky.CZ").startsWith("xn--"))
   }
 
   test("is_global_ip predicate matches Python ipaddress.is_global (ip_utils.py:24-41)") {

@@ -3,18 +3,24 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, LogicalPlan, SerializeFromObject}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec, CoalesceExec,
+  QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-import org.apache.spark.sql.functions.element_at
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, ObjectType}
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.canon.Canon
 import graft.engine.Engine
-import graft.model.Model.{Doc, DomainResult, Span}
+import graft.frontier.CuckooFilter
+import graft.model.Model.{Doc, DomainResult, FrontierEntry, Span}
 import graft.spans.SpanCodec
 import graft.universe.Universe
 
@@ -25,7 +31,51 @@ class TightBudgetUniverse(seed: Long) extends Universe(seed) {
   override def policyBudget(nsBucket: Int): Int = if (nsBucket == 0) 12 else 25
 }
 
-class EngineSpec extends AnyFunSuite {
+/** [[TightBudgetUniverse]] whose scheduling attributes are defined for a
+  * null canonical, so null seeds reach the entry builder.
+  */
+class NullSafeUniverse(seed: Long) extends TightBudgetUniverse(seed) {
+  override def nsProvider(domain: String): Int = if (domain == null) -1 else super.nsProvider(domain)
+  override def ttlFor(domain: String): Int = if (domain == null) -1 else super.ttlFor(domain)
+}
+
+/** The admission front end in its earlier formulation, kept as the
+  * reference for the sort-free one: first-enqueue dedup as a `groupBy`
+  * aggregate (`min_by` over `(seq, domain)`; `min` domain and depth for
+  * discovered hosts) and admission as `groupByKey` → `flatMapGroups`
+  * over fresh filters.
+  */
+object AdmissionReference {
+  def toFrontier(u: Universe, seeds: Dataset[(String, Long)]): Dataset[FrontierEntry] =
+    Engine.frontierEntries(u, seeds.toDF("domain", "seq")
+      .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
+      .groupBy(col("canonical"))
+      .agg(min_by(col("domain"), struct(col("seq"), col("domain"))).as("domain"),
+        min(col("seq")).as("seq"))
+      .withColumn("key", xxhash64(col("canonical")))
+      .withColumn("depth", lit(0)))
+
+  def toFrontierDiscovered(u: Universe, hosts: DataFrame): Dataset[FrontierEntry] =
+    Engine.frontierEntries(u, hosts.toDF("domain", "depth")
+      .withColumn("canonical", Canon.canonicalizeDomainCol(col("domain")))
+      .groupBy(col("canonical"))
+      .agg(min(col("domain")).as("domain"), min(col("depth")).as("depth"))
+      .withColumn("key", xxhash64(col("canonical")))
+      .withColumn("seq", Engine.discoverySeq(col("canonical"))))
+
+  def admit(entries: Dataset[FrontierEntry], partitions: Int, capacity: Long)
+      : Dataset[FrontierEntry] = {
+    import entries.sparkSession.implicits._
+    entries
+      .groupByKey(e => Math.floorMod(e.key, partitions.toLong).toInt)
+      .flatMapGroups { (idx, it) =>
+        val seen = CuckooFilter.create(capacity)
+        it.filter(e => seen.admit(e.key, idx))
+      }
+  }
+}
+
+class EngineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val spark = SparkSessionFixture.spark
   import spark.implicits._
@@ -366,8 +416,12 @@ class EngineSpec extends AnyFunSuite {
       (0 until 200).map(i => (u.seedDomain(i.toLong), i.toLong)))
     val entries = eng.toFrontier(seeds)
     // early-out consumer (the round-1 failure mode the drain-only snapshot
-    // had): limit stops tasks before the iterator drains
-    eng.admitUnseen(entries, round = 0).limit(3).collect()
+    // had): limit stops tasks before the iterator drains. The stage is
+    // coalesced, so a task runs several filter partitions in turn
+    val early = eng.admitUnseen(entries, round = 0).limit(3)
+    val coalesced = collect(early.queryExecution.executedPlan) { case c: CoalesceExec => c.numPartitions }
+    assert(coalesced.nonEmpty && coalesced.forall(_ < 8), s"coalesced to $coalesced")
+    early.collect()
     val fdir = Paths.get(s"$dir/filters/r0")
     // task-completion backstop publishes what each started task admitted;
     // poll briefly — cancelled tasks finish just after collect returns
@@ -392,5 +446,72 @@ class EngineSpec extends AnyFunSuite {
     val s1 = F.list(fdir1)
     val all1 = try s1.iterator().asScala.map(_.getFileName.toString).toVector finally s1.close()
     assert(all1.nonEmpty && all1.forall(_.endsWith(".bin")), s"leftovers: $all1")
+  }
+
+  test("seen-set admission plans no sort") {
+    val eng = newEngine(graft.TmpDirs.create("engine-nosort").toString)
+    val seeds = spark.createDataset((0 until 200).map(i => (u.seedDomain(i.toLong), i.toLong)))
+    def sortNodes(ds: Dataset[FrontierEntry]): Set[String] = {
+      ds.collect() // the final adaptive plan
+      collect(ds.queryExecution.executedPlan) {
+        case p @ (_: SortExec | _: SortAggregateExec | _: AppendColumnsExec |
+            _: AppendColumnsWithObjectExec) => p.nodeName
+      }.toSet
+    }
+    assert(sortNodes(eng.admitUnseen(eng.toFrontier(seeds), round = 0)).isEmpty)
+    // the check sees all three in the earlier formulation
+    assert(sortNodes(AdmissionReference.admit(AdmissionReference.toFrontier(u, seeds), 8, 1L << 20))
+      == Set("Sort", "SortAggregate", "AppendColumnsWithObject"))
+  }
+
+  test("a seed tie keeps the domain first in UTF-8 byte order") {
+    // MATHEMATICAL BOLD SMALL A (non-BMP) and FULLWIDTH SMALL A both map
+    // to "a" in IDNA: String.compareTo puts the first before the second,
+    // UTF-8 byte order (Spark's) the second before the first
+    val (bold, wide) = ("x\uD835\uDC1A.cz", "x\uFF41.cz")
+    assert(Canon.canonicalize(bold) == "xa.cz" && Canon.canonicalize(wide) == "xa.cz")
+    assert(bold.compareTo(wide) < 0 && Engine.utf8Order(bold, wide) > 0)
+    val eng = newEngine(graft.TmpDirs.create("engine-tie").toString)
+    val out = eng.toFrontier(spark.createDataset(Seq((bold, 7L), (wide, 7L)))).collect()
+    assert(out.map(e => (e.domain, e.canonical, e.seq)).toSeq == Seq((wide, "xa.cz", 7L)))
+  }
+
+  test("property: toFrontier and discovered-row admission equal the groupBy/groupByKey " +
+      "formulation at 1 and 4 shuffle partitions") {
+    val nu = new NullSafeUniverse(42L)
+    def variant(d: String, v: Int): String = v match {
+      case 0 => d
+      case 1 => d.toUpperCase(java.util.Locale.ROOT)
+      case 2 => d + "."
+      case 3 => s" $d\t"
+      case _ => d.capitalize + "."
+    }
+    // few canonicals, many raw variants of each
+    val genDomain: Gen[String] = Gen.frequency(
+      8 -> (for (i <- Gen.choose(0, 5); v <- Gen.choose(0, 4)) yield variant(s"d$i.cz", v)),
+      2 -> (for (i <- Gen.choose(0, 2); v <- Gen.choose(0, 2)) yield variant(s"háčky-$i.cz", v)),
+      2 -> Gen.oneOf("x\uD835\uDC1A.cz", "x\uFF41.cz", "xa.cz", "XA.CZ."),
+      1 -> Gen.const(null))
+    val genSeeds = Gen.listOf(Gen.zip(genDomain, Gen.choose(0L, 4L))) // seq ties
+    val genHosts = Gen.listOf(Gen.zip(genDomain, Gen.choose(1, 3)))
+    def sorted(ds: Dataset[FrontierEntry]): Seq[FrontierEntry] =
+      ds.collect().toSeq.sortBy(_.toString)
+    val prop = Prop.forAll(genSeeds, genHosts) { (seedRows, hostRows) =>
+      val eng = new Engine(spark, nu, workDir = graft.TmpDirs.create("engine-prop").toString,
+        frontierPartitions = 8)
+      val seeds = spark.createDataset(seedRows)
+      val hosts = hostRows.toDF("host", "depth")
+      val seedsOk = sorted(eng.toFrontier(seeds)) == sorted(AdmissionReference.toFrontier(nu, seeds))
+      val hostsOk = sorted(eng.admitUnseen(eng.toFrontierDiscovered(hosts), round = 0)) ==
+        sorted(AdmissionReference.admit(AdmissionReference.toFrontierDiscovered(nu, hosts),
+          8, 1L << 20))
+      Prop(seedsOk) :| "seeds" && Prop(hostsOk) :| "discovered hosts"
+    }
+    val old = spark.conf.get("spark.sql.shuffle.partitions")
+    try Seq("1", "4").foreach { parts =>
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+      assert(res.passed, s"at $parts shuffle partitions: ${res.status}")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", old)
   }
 }

@@ -291,4 +291,40 @@ class StreamingCrawlSpec extends AnyFunSuite {
         dir + "/disc", ckpt, partitions = 4, budgetPerBatch = _ => 100)
     }
   }
+
+  test("the committing stream runs each micro-batch's stateful stages once") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = graft.TmpDirs.create("state-once").toString
+    val id = "state-once-" + System.nanoTime()
+    // the politeness stage calls the budget once per bucket per run; budget
+    // 2 keeps deferred entries in the bucket's state over 4 micro-batches
+    val budget: Int => Int = { _ => CountingProbeService.bump(id, "budget"); 2 }
+    val input = MemoryStream[Doc]
+    val q = StreamingCrawl.commitStream(StreamingCrawl.frontierStream(input.toDS(), u,
+        partitions = 4, budgetPerBatch = budget), u, CrawlConfig(), dir,
+      graft.TmpDirs.create("state-once-ckpt").toString)
+    // stateOperators lists the plan's state operators top down, politeness
+    // first; its row counts are one run's: each run of the one bucket
+    // updates its state row, or removes it once the bucket drains
+    def polite = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
+      .distinctBy(_.batchId).map(_.stateOperators(0))
+    val domains = (1 to 7).map(i => s"t$i.cz").toSet
+    try {
+      input.addData(doc("doc-1", domains.toSeq.sorted: _*))
+      val resultsT = new SnapTable(spark, s"$dir/results", Seq("domain"))
+      def committed: Set[String] = resultsT.read()
+        .map(_.select("domain").as[String].collect().toSet).getOrElse(Set.empty)
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while ((committed != domains || !polite.exists(_.numRowsRemoved > 0)) &&
+          System.nanoTime() < deadline) {
+        q.exception.foreach(throw _)
+        Thread.sleep(300)
+      }
+      assert(committed == domains, "stream did not commit every domain")
+    } finally q.stop()
+    val runs = polite.map(o => o.numRowsUpdated + o.numRowsRemoved).sum
+    assert(runs == 4, s"politeness progress: $polite")
+    assert(CountingProbeService.countsFor(id) == Map("budget" -> runs),
+      "the politeness stage ran more often than its progress reports")
+  }
 }
