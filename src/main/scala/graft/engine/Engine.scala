@@ -479,14 +479,18 @@ class Engine(
     * deduped by a hash map. The coalesce keeps the session's task count
     * for whatever reads the entries; a task runs its filter partitions one
     * after another, so it holds one partition's distinct canonicals at a
-    * time.
+    * time. The entry builder runs after the coalesce so that the frame
+    * does not end in one: Catalyst drops a coalesce that sits directly
+    * under a repartition (CollapseRepartition), and admission repartitions
+    * its input, which would leave the dedup stage with P tasks.
     */
   private def dedupFrontier(rows: DataFrame): Dataset[FrontierEntry] = {
     val u = universe
     byFilterPartition(rows.withColumn("key", xxhash64(col("canonical"))))
       .select("domain", "canonical", "key", "seq", "depth").as[FrontierRow]
-      .mapPartitions(it => firstEnqueued(it).map(entryOf(u, _)))
+      .mapPartitions(firstEnqueued)
       .coalesce(sessionTasks)
+      .map(entryOf(u, _))
   }
 
   /** `rows` shuffled so that Spark partition `i` is filter partition `i`:
