@@ -55,9 +55,6 @@ object DedupOps {
     val c = df.cache(); unpersistAfter(c, c); c
   }
 
-  private[graft] def unpersistWhenConsumed[T](cached: org.apache.spark.sql.Dataset[T]): Unit =
-    unpersistAfter(cached, cached)
-
   /** When the first query whose analyzed plan contains `trigger`'s subtree
     * completes (success or failure), unpersist `cached` and unregister.
     * `trigger` may be a frame derived from `cached` — use that when the

@@ -27,11 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object SketchOps {
 
-  /** 60-bit md5 prefix of a string column, as a non-negative LONG —
-    * the library's standard derandomized hash (DuckDB-replayable). */
-  private def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   // ---------------------------------------------------------------- HLL
 
   /** Register width: 8-bit bucket index (m = 256) + 52 rho bits. 52 is

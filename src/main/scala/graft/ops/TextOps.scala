@@ -252,17 +252,6 @@ object TextOps {
         i => array_join(slice(toks, i + 1, lit(k)), " ")))
   }
 
-  /** One MinHash chunk component (the family [[graft.ops.DedupOps
-    * .minhashBands]] aggregates): component `i` of 8 is an 8-hex slice of
-    * `md5(shingle)` (i < 4) or `md5('~'||shingle)` (i ≥ 4) — two md5s per
-    * shingle for eight 32-bit components, reproducible in any engine.
-    */
-  def minhashChunk(shingle: Column, i: Int): Column = {
-    require(i >= 0 && i < 8, "chunk family provides 8 components")
-    if (i < 4) substring(md5(shingle.cast("binary")), 1 + 8 * i, 8)
-    else substring(md5(concat(lit("~"), shingle).cast("binary")), 1 + 8 * (i - 4), 8)
-  }
-
   // ----------------------------------------------------------- simhash
 
   /** Per-token 64-bit hash for SimHash as a hex string: the first 16 hex

@@ -8,12 +8,6 @@ import graft.model.Model._
   */
 object Parsers {
 
-  /** Strip `"<name> <ttl> IN <TYPE> "` prefix from a zone-file line
-    * (reference `dns_utils.py:256-257`).
-    */
-  def valueFromRecord(line: String): String =
-    line.split("\\s+", 5).lastOption.getOrElse(line)
-
   /** IANA DNSSEC algorithm mnemonics (reference `dns_utils.py:130-141`
     * uses dnspython's table; this is the same public IANA registry).
     */

@@ -100,8 +100,6 @@ object JsonSink {
   }
 
   private def opt(v: Option[String]): J = v.fold[J](JNull)(JS)
-  private def optArr(v: Option[Seq[String]]): J =
-    v.fold[J](JNull)(xs => JArr(xs.map(JS)))
 
   // --------------------------------------------------------- DNS shapes
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
@@ -183,7 +183,9 @@ object StreamingCrawl {
     * The entries are cached: the emptiness test and the probe pass are two
     * jobs over the micro-batch, and without the cache the second would run
     * the stateful stage that emits the entries (politeness, loading and
-    * committing its state store) a second time.
+    * committing its state store) a second time. The discovered hosts are
+    * cached too, so their emptiness test and their write read the
+    * committed delta once.
     */
   private def commitEach(entries: Dataset[FrontierEntry], u: Universe, cfg: CrawlConfig,
       dcfg: Engine.DiscoveryConfig, clock: String, workDir: String,
@@ -194,6 +196,7 @@ object StreamingCrawl {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[FrontierEntry], _: Long) =>
         val rows = batch.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        var hosts: Option[DataFrame] = None
         try if (!rows.isEmpty()) {
           val spark = batch.sparkSession
           val results = new SnapTable(spark, s"$workDir/results", Seq("domain"))
@@ -206,11 +209,13 @@ object StreamingCrawl {
               }
             }))
           discDir.foreach { dir =>
-            val hosts = Engine.discoveredRows(results.delta(v, Engine.StreamResultRows.schema))
+            val found = Engine.discoveredRows(results.delta(v, Engine.StreamResultRows.schema))
+              .persist(StorageLevel.MEMORY_AND_DISK)
+            hosts = Some(found)
             // no empty files: each new file in discDir starts a micro-batch
-            if (!hosts.isEmpty) hosts.coalesce(1).write.mode("append").parquet(dir)
+            if (!found.isEmpty) found.coalesce(1).write.mode("append").parquet(dir)
           }
-        } finally rows.unpersist(blocking = false)
+        } finally { rows.unpersist(blocking = false); hosts.foreach(_.unpersist(blocking = false)) }
         ()
       }
       .start()

@@ -59,10 +59,16 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     */
   def mergeCommit(df: DataFrame): Int = {
     val prev = currentVersion
-    val v = prev.map(_ + 1).getOrElse(1)
+    commit(prev.map(_ + 1).getOrElse(1), df, prev.map(manifest).getOrElse(Seq.empty))
+  }
+
+  /** Write `df` as `data/v{v}`, publish manifest `v` (the `kept` dirs plus
+    * the new one) and flip `_current` to it atomically.
+    */
+  private def commit(v: Int, df: DataFrame, kept: Seq[String]): Int = {
     val dataDir = s"data/v$v"
     df.write.mode("overwrite").parquet(rootP.resolve(dataDir).toString)
-    val dirs = prev.map(manifest).getOrElse(Seq.empty) :+ dataDir
+    val dirs = kept :+ dataDir
     val json = s"""{"version":$v,"key":${keyCols.mkString("[\"", "\",\"", "\"]")},"dirs":${dirs.mkString("[\"", "\",\"", "\"]")}}"""
     Files.write(snapsP.resolve(s"v$v.json"), json.getBytes(StandardCharsets.UTF_8))
     val tmp = rootP.resolve(s"_current.tmp.$v")
@@ -106,16 +112,6 @@ final class SnapTable(spark: SparkSession, root: String, keyCols: Seq[String]) {
     */
   def compact(): Option[Int] = {
     val resolved = read().getOrElse(return None)
-    val prev = currentVersion.get
-    val v = prev + 1
-    val dataDir = s"data/v$v"
-    resolved.write.mode("overwrite").parquet(rootP.resolve(dataDir).toString)
-    val json = s"""{"version":$v,"key":${keyCols.mkString("[\"", "\",\"", "\"]")},"dirs":["$dataDir"]}"""
-    Files.write(snapsP.resolve(s"v$v.json"), json.getBytes(StandardCharsets.UTF_8))
-    val tmp = rootP.resolve(s"_current.tmp.$v")
-    Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, currentP, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    Some(v)
+    Some(commit(currentVersion.get + 1, resolved, Seq.empty))
   }
 }

@@ -469,7 +469,6 @@ class Universe(val seed: Long) extends graft.probes.ProbeService {
   }
 
   private val servers = Array("nginx", "apache", "nginx/1.24.0", "caddy", "Microsoft-IIS/10.0")
-  private def srv(x: Long): String = servers(Math.floorMod(x >>> 32, 5L).toInt)
 
   private val tlsVersions = Array("TLSv1.2", "TLSv1.3")
   private val tlsCiphers = Array("TLS_AES_128_GCM_SHA256", "TLS_AES_256_GCM_SHA384",
