@@ -9,6 +9,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -292,20 +293,16 @@ object Engine {
       }
     }
 
-  /** One filter partition's seen-set admission within a task: the
-    * partition's filter (its committed snapshot, or empty) checks and
-    * updates each entry ([[CuckooFilter.admit]]), and the updated filter
-    * is published to `ref` once. The filter is dropped when published, so
-    * a task that runs several filter partitions holds one at a time.
+  /** One filter partition's seen-set state within a task: the partition's
+    * filter (its committed snapshot, or empty) checks and updates each key
+    * ([[CuckooFilter.admit]]), and the updated filter is published to
+    * `ref` once, then dropped.
     *
     * Snapshot discipline: write to a per-attempt temp file, then an atomic
     * rename — a speculative or retried task racing a sibling can never
     * leave a torn file (each attempt publishes a complete file; last
-    * rename wins). The write fires on full drain AND on task completion
-    * (backstop), so a consumer that stops early (limit/take, AQE
-    * early-out) still records the keys it actually admitted; a failed
-    * attempt's write is harmless because a round's refs are only committed
-    * after the round succeeds.
+    * rename wins). A failed attempt's write is harmless because a round's
+    * refs are only committed after the round succeeds.
     */
   private final class SeenShard(idx: Int, committed: Option[String], capacity: Long,
       ref: String) {
@@ -313,10 +310,11 @@ object Engine {
       case Some(f) => CuckooFilter.deserialize(Files.readAllBytes(Paths.get(f)))
       case None => CuckooFilter.create(capacity)
     }
-    private val ctx = TaskContext.get()
-    if (ctx != null) ctx.addTaskCompletionListener[Unit](_ => publish())
 
-    private def publish(): Unit = if (filter != null) {
+    def admit(key: Long): Boolean = filter.admit(key, idx)
+
+    def publish(): Unit = if (filter != null) {
+      val ctx = TaskContext.get()
       val attempt = if (ctx != null) ctx.taskAttemptId() else System.nanoTime()
       val tmp = Paths.get(s"$ref.a$attempt.tmp")
       Files.write(tmp, filter.serialize())
@@ -325,22 +323,47 @@ object Engine {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+  }
 
-    /** The entries the filter has not seen, streamed: the partition's
-      * fresh entries are never materialized.
-      */
-    def admit(entries: Iterator[FrontierEntry]): Iterator[FrontierEntry] = {
-      val fresh = entries.filter(e => filter.admit(e.key, idx))
-      new Iterator[FrontierEntry] {
-        def hasNext: Boolean = {
-          val h = fresh.hasNext
-          if (!h) publish() // full drain: publish without waiting for task end
-          h
-        }
-        def next(): FrontierEntry = fresh.next()
+  /** The entries of one task that no filter has seen, streamed. The task's
+    * entries arrive as runs, one per filter partition (`floorMod(key, p)`):
+    * when the id changes, the previous [[SeenShard]] is published and the
+    * next opened from `refs`, so the task holds one filter at a time and a
+    * partition with no entries loads and publishes nothing. The last shard
+    * publishes on full drain; an open shard also publishes at task end, so
+    * a consumer that stops early (limit/take, AQE early-out) still records
+    * the keys it actually admitted.
+    */
+  private def admitRuns(entries: Iterator[FrontierEntry], p: Int, refs: Map[Int, String],
+      capacity: Long, outDir: String): Iterator[FrontierEntry] = {
+    var idx = -1
+    var shard: SeenShard = null
+    val ctx = TaskContext.get()
+    if (ctx != null) ctx.addTaskCompletionListener[Unit](_ => if (shard != null) shard.publish())
+    val fresh = entries.filter { e =>
+      val i = Math.floorMod(e.key, p.toLong).toInt
+      if (i != idx) {
+        if (shard != null) shard.publish()
+        idx = i
+        shard = new SeenShard(i, refs.get(i), capacity, s"$outDir/part$i.bin")
       }
+      shard.admit(e.key)
+    }
+    new Iterator[FrontierEntry] {
+      def hasNext: Boolean = {
+        val h = fresh.hasNext
+        if (!h && shard != null) shard.publish() // full drain: publish without waiting for task end
+        h
+      }
+      def next(): FrontierEntry = fresh.next()
     }
   }
+
+  /** Mark on the logical plan of a `dedupFrontier` result, holding the
+    * engine's filter partition count: each of its Spark partitions is whole
+    * filter partitions, each one contiguous run.
+    */
+  private val FilterAligned = TreeNodeTag[Int]("graft.filterAligned")
 
   /** `(host, depth)` frontier candidates of committed result rows: each
     * row's stored `discovered` hosts, one level below the row's depth.
@@ -478,25 +501,29 @@ class Engine(
     * straight to their filter partition (`pmod(key, P)`) and each is
     * deduped by a hash map. The coalesce keeps the session's task count
     * for whatever reads the entries; a task runs its filter partitions one
-    * after another, so it holds one partition's distinct canonicals at a
-    * time. The entry builder runs after the coalesce so that the frame
-    * does not end in one: Catalyst drops a coalesce that sits directly
-    * under a repartition (CollapseRepartition), and admission repartitions
-    * its input, which would leave the dedup stage with P tasks.
+    * after another, each as one contiguous run, so it holds one
+    * partition's distinct canonicals at a time. The result is marked
+    * [[Engine.FilterAligned]]: admission runs in this stage, with no
+    * exchange of its own. The entry builder runs after the coalesce so that
+    * the frame does not end in one: Catalyst drops a coalesce that sits
+    * directly under a repartition (CollapseRepartition), which would leave
+    * the dedup stage with P tasks under a consumer that repartitions.
     */
   private def dedupFrontier(rows: DataFrame): Dataset[FrontierEntry] = {
     val u = universe
-    byFilterPartition(rows.withColumn("key", xxhash64(col("canonical"))))
+    val entries = byFilterPartition(rows.withColumn("key", xxhash64(col("canonical"))))
       .select("domain", "canonical", "key", "seq", "depth").as[FrontierRow]
       .mapPartitions(firstEnqueued)
       .coalesce(sessionTasks)
       .map(entryOf(u, _))
+    entries.queryExecution.logical.setTagValue(FilterAligned, frontierPartitions)
+    entries
   }
 
   /** `rows` shuffled so that Spark partition `i` is filter partition `i`:
     * the rows whose `pmod(key, P)` is `i`.
     */
-  private def byFilterPartition[T](rows: Dataset[T]): Dataset[T] =
+  private def byFilterPartition(rows: DataFrame): DataFrame =
     rows.repartitionById(frontierPartitions,
       pmod(col("key"), lit(frontierPartitions.toLong)).cast("int"))
 
@@ -527,10 +554,10 @@ class Engine(
   /** The committed checkpoint's snapshot refs (partitions that have one). */
   private def loadFilterRefs(): Map[Int, String] = committedState()._3
 
-  /** Distributed seen-check + filter update. Entries are co-partitioned
-    * with their filter (`pmod(key, P)`); each partition's filter is read,
-    * probed, updated with the admitted keys, and re-snapshotted — the raw
-    * key set never moves to the driver.
+  /** Distributed seen-check + filter update of [[toFrontier]] (or
+    * discovered-row) entries, in the dedup's stage: each filter partition's
+    * filter is read, probed, updated with the admitted keys, and
+    * re-snapshotted — the raw key set never moves to the driver.
     */
   private[graft] def admitUnseen(entries: Dataset[FrontierEntry], round: Int)
       : Dataset[FrontierEntry] =
@@ -541,26 +568,20 @@ class Engine(
     * (not the last committed checkpoint) and writes to a sibling dir so
     * the two admissions of one round never clobber each other's files.
     *
-    * Each Spark partition of the shuffle is one filter partition; its id
-    * comes from the rows' key, since after the coalesce a task's index
-    * names no partition. An empty partition loads and publishes nothing.
+    * `entries` must be this engine's [[dedupFrontier]] output, as returned
+    * or cached: a task's rows are then whole filter partitions, each one
+    * run ([[Engine.admitRuns]]), so admission plans no exchange and no
+    * coalesce. Any other input throws `IllegalArgumentException`.
     */
   private def admitUnseenInto(entries: Dataset[FrontierEntry],
       refs: Map[Int, String], outDir: String): Dataset[FrontierEntry] = {
+    require(entries.queryExecution.logical.getTagValue(FilterAligned).contains(frontierPartitions),
+      "admission takes toFrontier or toFrontierDiscovered output of this engine, as returned or cached")
     val refsB = spark.sparkContext.broadcast(refs)
     val p = frontierPartitions
     val cap = filterCapacityPerPartition
     Files.createDirectories(Paths.get(outDir))
-    byFilterPartition(entries)
-      .mapPartitions { it =>
-        val rows = it.buffered
-        if (!rows.hasNext) rows
-        else {
-          val idx = Math.floorMod(rows.head.key, p.toLong).toInt
-          new SeenShard(idx, refsB.value.get(idx), cap, s"$outDir/part$idx.bin").admit(rows)
-        }
-      }
-      .coalesce(sessionTasks)
+    entries.mapPartitions(admitRuns(_, p, refsB.value, cap, outDir))
   }
 
   /** Crash-mid-round hygiene: delete filter snapshot dirs of every round

@@ -34,7 +34,12 @@ import graft.frontier.LongOpenHashSet
   * every key meets exactly one set shard.
   *
   * Within a partition the kept row for a key is the first in partition
-  * order, matching `Engine.admitUnseen`'s streamed-iterator contract.
+  * order, as in `Engine.admitUnseen`, which streams each filter partition's
+  * run of entries through that partition's filter. The crawl's admission
+  * is co-partitioned another way: it runs in the stage of its dedup's
+  * `pmod(key, P)` exchange, after a coalesce Catalyst cannot see through,
+  * so it checks a mark the dedup leaves on its plan instead of requiring
+  * a distribution.
   */
 case class CuckooAdmit(
     keyExpr: Expression,

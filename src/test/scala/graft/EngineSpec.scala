@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, ObjectType}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -91,7 +92,7 @@ class EngineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   /** Spark jobs of one resumed `Engine.run` round with discovery on
     * ("a resumed round runs a pinned number of Spark jobs").
     */
-  private val RoundJobs = 34
+  private val RoundJobs = 32
 
   /** Seed corpus: interleaved docs whose text spans carry domains (with
     * planted case/trailing-dot/IDN/duplicate variants via
@@ -458,10 +459,28 @@ class EngineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
             _: AppendColumnsWithObjectExec) => p.nodeName
       }.toSet
     }
-    assert(sortNodes(eng.admitUnseen(eng.toFrontier(seeds), round = 0)).isEmpty)
+    val admitted = eng.admitUnseen(eng.toFrontier(seeds), round = 0)
+    assert(sortNodes(admitted).isEmpty)
     // the check sees all three in the earlier formulation
     assert(sortNodes(AdmissionReference.admit(AdmissionReference.toFrontier(u, seeds), 8, 1L << 20))
       == Set("Sort", "SortAggregate", "AppendColumnsWithObject"))
+    // admission runs in the dedup's stage: the dedup's is the one exchange
+    val exchanges = collect(admitted.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+    assert(exchanges == 1, s"admission planned $exchanges exchanges")
+  }
+
+  test("seen-set admission rejects entries that are not the dedup's output") {
+    val eng = newEngine(graft.TmpDirs.create("engine-unaligned").toString)
+    val seeds = spark.createDataset((0 until 50).map(i => (u.seedDomain(i.toLong), i.toLong)))
+    val entries = eng.toFrontier(seeds)
+    // derived from the dedup's output: a new plan, no longer marked aligned
+    intercept[IllegalArgumentException](eng.admitUnseen(entries.filter(_ => true), round = 0))
+    intercept[IllegalArgumentException](
+      eng.admitUnseen(spark.createDataset(entries.collect().toSeq), round = 0))
+    // the dedup's output itself, cached or not, is accepted
+    val cached = entries.cache()
+    try assert(eng.admitUnseen(cached, round = 0).count() == cached.count())
+    finally cached.unpersist()
   }
 
   test("a seed tie keeps the domain first in UTF-8 byte order") {
@@ -497,15 +516,28 @@ class EngineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     def sorted(ds: Dataset[FrontierEntry]): Seq[FrontierEntry] =
       ds.collect().toSeq.sortBy(_.toString)
     val prop = Prop.forAll(genSeeds, genHosts) { (seedRows, hostRows) =>
-      val eng = new Engine(spark, nu, workDir = graft.TmpDirs.create("engine-prop").toString,
-        frontierPartitions = 8)
+      val dir = graft.TmpDirs.create("engine-prop").toString
+      val eng = new Engine(spark, nu, workDir = dir, frontierPartitions = 8)
       val seeds = spark.createDataset(seedRows)
       val hosts = hostRows.toDF("host", "depth")
       val seedsOk = sorted(eng.toFrontier(seeds)) == sorted(AdmissionReference.toFrontier(nu, seeds))
-      val hostsOk = sorted(eng.admitUnseen(eng.toFrontierDiscovered(hosts), round = 0)) ==
+      val admitted = sorted(eng.admitUnseen(eng.toFrontierDiscovered(hosts), round = 0))
+      val hostsOk = admitted ==
         sorted(AdmissionReference.admit(AdmissionReference.toFrontierDiscovered(nu, hosts),
           8, 1L << 20))
-      Prop(seedsOk) :| "seeds" && Prop(hostsOk) :| "discovered hosts"
+      // a task runs several filter partitions: each one's snapshot holds
+      // exactly its admitted keys, and a partition with none writes nothing
+      val snapshotsOk = (0 until 8).forall { i =>
+        val keys = admitted.map(_.key).filter(k => Math.floorMod(k, 8L) == i)
+        val f = java.nio.file.Paths.get(s"$dir/filters/r0/part$i.bin")
+        if (keys.isEmpty) !Files.exists(f)
+        else {
+          val filter = CuckooFilter.deserialize(Files.readAllBytes(f))
+          filter.size == keys.size && keys.forall(filter.contains)
+        }
+      }
+      Prop(seedsOk) :| "seeds" && Prop(hostsOk) :| "discovered hosts" &&
+        Prop(snapshotsOk) :| "published snapshots"
     }
     val old = spark.conf.get("spark.sql.shuffle.partitions")
     try Seq("1", "4").foreach { parts =>
